@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..partitioning import spread
 from . import materialize_release
 from .text import tokens_col
 
@@ -48,12 +49,21 @@ def shingles_col(text: Column, n: int = 3) -> Column:
 def doc_shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """(doc_id, shingle) exploded inverted-index rows.
 
+    The explode turns each document into all of its shingles, so it
+    must run across cores, not on the source's split layout: a corpus
+    stored as one row group would otherwise tokenize, explode and feed
+    every downstream map stage on one task. ``partitioning.spread``
+    hash-partitions the input on doc_id when its plan runs on too few
+    partitions, and the per-document aggregates of the callers reuse
+    that partitioning instead of planning their own exchange.
+
     Tokenization is staged into its own projection so the split/lower
     pass runs once per row — referencing ``shingles_col`` directly would
     inline the tokenizer n times per gram (CollapseProject keeps the
     stage split because the producer expression is non-cheap and
     multiply-referenced)."""
-    toked = df.select("doc_id", tokens_col(F.col(text_col)).alias("_toks"))
+    src = spread(df.select("doc_id", text_col), "doc_id")
+    toked = src.select("doc_id", tokens_col(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
     gram = F.transform(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..partitioning import plan_bytes
 from .text import tokens_col
 
 # ---------------------------------------------------------------------------
@@ -191,16 +192,11 @@ CONTAM_BROADCAST_CAP_BYTES = 256 << 20
 
 def _estimated_plan_bytes(df: DataFrame) -> int:
     """Catalyst's sizeInBytes estimate for ``df`` (driver-only; no
-    job; py4j converts the BigInt to int). -1 when unavailable, and
-    statless plans report Long.MaxValue — either way the caller
-    treats it as TOO BIG, because the guard exists to prevent an
+    job). -1 for a plan without size statistics, which the caller
+    treats as TOO BIG, because the guard exists to prevent an
     unbounded broadcast."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return -1
+    est = plan_bytes(df)
+    return -1 if est is None else est
 
 
 def contamination_check(

@@ -308,24 +308,25 @@ def plane_weights(plane: int, dim: int) -> list[float]:
     return out
 
 
-def _hyperplane_sign(v: Column, plane: int, dim: int) -> Column:
-    """Sign of the projection onto :func:`plane_weights` — sequential
-    left fold, matching DuckDB's ``list_dot_product`` bit-for-bit.
+def _hyperplane_sign(vec_col: str, plane: int, dim: int) -> Column:
+    """Sign of the projection of the array column named ``vec_col``
+    onto :func:`plane_weights` — sequential left fold, matching
+    DuckDB's ``list_dot_product`` bit-for-bit.
 
     The weight array and fold are ONE parsed SQL expression instead of
     ``dim`` F.lit Column calls: 8 planes × 64 weights cost ~1k py4j
-    round-trips (~0.55 s of driver wall per sign_buckets call — r17
-    cProfile). Parsed tree identical: repr(float) is the shortest
-    round-trip decimal, so the ``D`` literals parse back to the exact
-    same doubles, and the lambda fold is the same left-associated
-    aggregate. NOTE: ``v`` must be a plain column reference (its name
-    is spliced into the SQL string) — the only caller passes
-    ``F.col("v")``."""
+    round-trips (~0.55 s of driver wall per sign_buckets call).
+    Parsed tree identical: repr(float) is the shortest round-trip
+    decimal, so the ``D`` literals parse back to the exact same
+    doubles, and the lambda fold is the same left-associated
+    aggregate. The column is passed by name and backquoted into the
+    SQL, so any column name parses as that one column reference."""
     arr = ",".join(f"{x!r}D" for x in plane_weights(plane, dim))
+    quoted = "`" + vec_col.replace("`", "``") + "`"
     # the aggregate's zero and the per-element product mirror the old
     # F.lit(0.0) / x * wi exactly
     proj = F.expr(
-        f"aggregate(zip_with(v, array({arr}), (x, wi) -> x * wi), "
+        f"aggregate(zip_with({quoted}, array({arr}), (x, wi) -> x * wi), "
         "0.0D, (acc, x) -> acc + x)"
     )
     return F.when(proj >= 0, 1).otherwise(0)
@@ -339,7 +340,7 @@ def sign_buckets(
     candidates match on either half, doubling recall for ~2× the
     candidate volume."""
     signs = [
-        _hyperplane_sign(F.col("v"), p, dim).cast("string")
+        _hyperplane_sign("v", p, dim).cast("string")
         for p in range(planes)
     ]
     half = planes // 2

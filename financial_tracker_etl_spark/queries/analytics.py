@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import broadcast
 
 from .. import fixtures
-from ..catalog import load_table, table_path
+from ..catalog import load_table
 from . import QuerySpec
 
 
@@ -3652,24 +3652,22 @@ def _q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm (ext/graph.py) — one edge⋈rank shuffle per iteration, lineage
     cut by localCheckpoint each round.
 
-    The whole run executes under a SOURCE-BYTES-derived shuffle
-    partition count (same derivation and env pins as the streaming
-    state sizing — windows.stream_shuffle_partitions): every iteration
-    stage at sf0.1 otherwise runs 32 near-empty tasks over a ~16k-row
-    rank vector and a ~14 MB edge list, and AQE's coalescing cannot
-    shrink them (parallelismFirst keeps the session minimum, and the
-    cached edge side of each iteration join pins its partitioning
-    anyway). Measured r17: 6.1 s median → 3.1 s at the derived count;
-    results are partition-count invariant (integer-ppm sums; pinned by
-    the 7/90-partition full differentials). Every shuffle-bearing
-    action of the operator happens inside pagerank() itself (eager
-    lineage cuts), so the scope covers the whole computation; the
-    returned frame is a checkpointed RDD plus narrow projections."""
+    The whole run executes under a shuffle partition count derived
+    from the plan statistics of its two sources
+    (partitioning.derived_shuffle_partitions), not the session
+    constant: the rank vector is O(nodes) and the edge list a few MB
+    at sf0.1, so 32 partitions per iteration would be 32 near-empty
+    tasks, and AQE cannot coalesce them (parallelismFirst keeps the
+    session minimum, and the cached edge side of each iteration join
+    pins its partitioning). Results do not depend on the count
+    (integer-ppm sums; pinned by the 7/90-partition full
+    differentials). Every shuffle-bearing action of the operator
+    happens inside pagerank() itself (eager lineage cuts), so the
+    scope covers the whole computation; the returned frame is a
+    checkpointed RDD plus narrow projections."""
     from ..ext.graph import pagerank
-    from ..streaming.windows import (
-        scoped_shuffle_partitions,
-        stream_shuffle_partitions,
-    )
+    from ..partitioning import derived_shuffle_partitions
+    from ..streaming.windows import scoped_shuffle_partitions
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -3690,12 +3688,7 @@ def _q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w",
         )
     )
-    with scoped_shuffle_partitions(
-        spark,
-        stream_shuffle_partitions(
-            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
-        ),
-    ):
+    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(li, orders)):
         ranks = pagerank(
             edges, iters=_PAGERANK_ITERS, damping_ppm=_PAGERANK_DAMPING_PPM
         )
@@ -3767,14 +3760,12 @@ _BFS_MAX_HOPS = 4
 
 
 def _q_purchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # source-bytes-derived shuffle partitions, exactly as in
+    # shuffle partitions derived from the sources, exactly as in
     # _q_purchase_pagerank (same frontier-vs-32-empty-tasks shape;
     # every shuffle-bearing action runs inside bfs_hops' eager cuts)
     from ..ext.graph import bfs_hops
-    from ..streaming.windows import (
-        scoped_shuffle_partitions,
-        stream_shuffle_partitions,
-    )
+    from ..partitioning import derived_shuffle_partitions
+    from ..streaming.windows import scoped_shuffle_partitions
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -3794,12 +3785,7 @@ def _q_purchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     seeds = edges.agg(F.min("src").alias("node"))
-    with scoped_shuffle_partitions(
-        spark,
-        stream_shuffle_partitions(
-            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
-        ),
-    ):
+    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(li, orders)):
         dist = bfs_hops(edges, seeds, max_hops=_BFS_MAX_HOPS)
     return dist.select(
         "node",

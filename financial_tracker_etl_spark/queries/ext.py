@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import load_table, table_path
+from ..catalog import load_table
 from ..ext.dedup import (
     minhash_near_dups,
     shingle_jaccard_pairs,
@@ -341,22 +341,18 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, cluster_id = component min). Oracle is a DuckDB recursive
     CTE computing the same transitive closure."""
     from ..ext.cluster import connected_components
-    from ..streaming.windows import (
-        scoped_shuffle_partitions,
-        stream_shuffle_partitions,
-    )
+    from ..partitioning import derived_shuffle_partitions
+    from ..streaming.windows import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents")
-    # pairs are materialized (persist+count) INSIDE shingle_jaccard_
-    # pairs at the session partitioning — only the label-propagation
-    # loop runs under the source-bytes-derived count (the label vector
-    # is O(docs); 32 near-empty tasks per round otherwise — same
-    # rationale and pins as _q_purchase_pagerank, r17)
+    # pair generation spreads its own fan-out (doc_shingles) and is
+    # materialized inside shingle_jaccard_pairs before the scope
+    # opens, so its shuffles keep the session count. Only the
+    # label-propagation loop runs under the count derived from the
+    # corpus: the label vector is O(docs), and at the session count
+    # every round would be 32 near-empty tasks.
     edges = shingle_jaccard_pairs(docs).filter(F.col("jaccard") >= 0.4)
-    with scoped_shuffle_partitions(
-        spark,
-        stream_shuffle_partitions(table_path(sf_dir, "documents")),
-    ):
+    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(docs)):
         components = connected_components(edges)
     return components.select(F.col("node").alias("doc_id"), "cluster_id")
 
@@ -1097,21 +1093,16 @@ def _q_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext.sampling.leakage_safe_splits)."""
     from ..ext.cluster import connected_components
     from ..ext.sampling import leakage_safe_splits
-    from ..streaming.windows import (
-        scoped_shuffle_partitions,
-        stream_shuffle_partitions,
-    )
+    from ..partitioning import derived_shuffle_partitions
+    from ..streaming.windows import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents")
-    # label-propagation loop under source-bytes-derived partitions —
-    # same rationale/pins as _q_dedup_clusters (r17); the pair
-    # generation materializes inside shingle_jaccard_pairs before the
-    # scope opens
+    # as in _q_dedup_clusters: the pairs materialize (with their
+    # fan-out spread by doc_shingles) before the scope opens, and only
+    # the O(docs) label-propagation loop runs under the count derived
+    # from the corpus
     edges = shingle_jaccard_pairs(docs).filter(F.col("jaccard") >= 0.4)
-    with scoped_shuffle_partitions(
-        spark,
-        stream_shuffle_partitions(table_path(sf_dir, "documents")),
-    ):
+    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(docs)):
         clusters = connected_components(edges).select(
             F.col("node").alias("doc_id"), "cluster_id"
         )

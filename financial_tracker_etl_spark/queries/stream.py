@@ -368,21 +368,17 @@ def _q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("change_type")
         )
 
-    schema = spark.read.parquet(feed_dir).schema
+    feed = spark.read.parquet(feed_dir)
     # no stateful operator here, but the foreachBatch merges' inner
     # shuffles (the state windows) otherwise run at the batch-session
     # constant per micro-batch; size them from the feed like every
     # other run-to-completion stream (windows.py rationale)
-    from ..streaming.windows import (
-        scoped_shuffle_partitions,
-        stream_shuffle_partitions,
-    )
+    from ..partitioning import derived_shuffle_partitions
+    from ..streaming.windows import scoped_shuffle_partitions
 
-    with scoped_shuffle_partitions(
-        spark, stream_shuffle_partitions(feed_dir)
-    ):
+    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(feed)):
         q = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
             .writeStream.foreachBatch(handle)

@@ -141,19 +141,29 @@ class LogStructuredState(KeyedParquetState):
                 f"seed_from_files on non-empty state {self.path!r}: "
                 "seeding is a bootstrap; use merge() for updates"
             )
-        seed_fields = {
-            f.name for f in self.spark.read.parquet(src_dir).schema.fields
-        }
+        seed = self.spark.read.parquet(src_dir)
         missing = [
             c
             for c in (*self.keys, *self.version_cols, *self._seed_required())
-            if c not in seed_fields
+            if c not in seed.columns
         ]
         if missing:
             raise ValueError(
                 f"seed at {src_dir!r} lacks required column(s) {missing}; "
                 f"state schema needs keys {self.keys} + versions "
                 f"{self.version_cols}"
+            )
+        # Spark writes every parquet column as nullable, so the schema
+        # cannot prove the flags non-null; one probe per extra column
+        nulls = [
+            c
+            for c in self._seed_required()
+            if not seed.filter(F.col(c).isNull()).isEmpty()
+        ]
+        if nulls:
+            raise ValueError(
+                f"seed at {src_dir!r} has NULL values in {nulls}; "
+                "merge() would have written them non-null"
             )
         os.makedirs(self.path, exist_ok=True)
         for f in os.listdir(src_dir):
@@ -164,7 +174,8 @@ class LogStructuredState(KeyedParquetState):
         self._n_deltas += 1
 
     def _seed_required(self) -> tuple[str, ...]:
-        """Extra columns a seed delta must carry (subclass hook)."""
+        """Extra columns a seed delta must carry, with no NULL values
+        (subclass hook)."""
         return ()
 
     def compact(self) -> None:
@@ -317,9 +328,10 @@ class TombstoneLogState(LogStructuredState):
         self.merge(rows.withColumn(self.TOMBSTONE, F.lit(True)))
 
     def _seed_required(self) -> tuple[str, ...]:
-        # a seed written without the tombstone flag would silently
-        # corrupt: read_merged's ~_deleted filter drops rows whose
-        # flag is NULL (r16 advisory on the raw-copy seeding path)
+        # a seed without the tombstone flag, or with a NULL flag, would
+        # silently corrupt: read_merged's ~_deleted filter drops rows
+        # whose flag is NULL, and merge() normalizes NULL to False only
+        # on the merge path, never on a copied seed
         return (self.TOMBSTONE,)
 
     def read_merged(self) -> DataFrame:

@@ -25,6 +25,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import events_ts_us_col, table_path
+from ..partitioning import derived_shuffle_partitions
 
 WATERMARK_DELAY = "47 minutes"
 WATERMARK_DELAY_US = 47 * 60 * 1_000_000
@@ -65,10 +66,6 @@ EVENT_TIME_BOUND_SQL = (
 )
 
 
-def _events_partitions(sf_dir: str) -> int:
-    return stream_shuffle_partitions(table_path(sf_dir, "events"))
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import _ensure_session_defaults
 
@@ -102,87 +99,23 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- stateful-shuffle sizing (round-16 optimization) -----------------------
+# --- stateful-shuffle sizing ------------------------------------------------
 #
 # A stateful streaming operator pins spark.sql.shuffle.partitions into its
 # checkpoint at first run: that count IS the number of state-store
-# instances forever (AQE cannot coalesce stateful plans). Inheriting the
-# batch-side constant (32 here) gave every MB-scale stream 32 — and the
-# symmetric-hash interval join 4 stores per partition = 128 instances —
-# whose per-commit fixed cost dominated wall time (measured at sf0.1:
-# stream_stream_interval_join 25.5 s at 32 partitions vs 7.3 s at 4;
-# commitTimeMs 336 s total across 128 instances vs 5.2 s across 16).
-# So the state partition count is derived from the run's SOURCE size —
-# the guide-§2 "scale-adaptive, not a constant tuned for either local
-# mode or the cluster" rule — with:
-#
-# - a target of 64 MB of source bytes per state partition (conservative
-#   upper proxy for state bytes: join buffers hold at most the
-#   watermark-bounded source, window/dedup state is smaller),
-# - a floor of min(4, cores) so a tiny stream never serializes on one
-#   straggler task (measured: 1 partition pays 2-3x over 4),
-# - a cap of the session's parallelism (a cluster deployment that wants
-#   more pins SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS from capacity
-#   planning: expected_state_bytes / target_per_store).
-#
-# SPARK_GRAFT_SHUFFLE_PARTITIONS (the partition-count-invariance
-# harness pin) still wins over the derivation: results must never
-# depend on this count, and the invariance differentials must be able
-# to force streams onto 7/90 partitions like every batch query.
-
-STREAM_STATE_TARGET_BYTES = 64 << 20
+# instances forever (AQE cannot coalesce stateful plans). The batch-side
+# constant (32 here) gave every MB-scale stream 32 stores, and the
+# symmetric-hash interval join 4 stores per partition, whose per-commit
+# fixed cost dominated wall time (stream_stream_interval_join at sf0.1:
+# 25.5 s at 32 partitions vs 7.3 s at 4). So each run-to-completion stream
+# sizes its state from a batch read of its source through the shared
+# plan-statistics sizer (partitioning.derived_shuffle_partitions).
 
 
-def stream_shuffle_partitions(*src_paths: str) -> int:
-    """State-partition count for a run-to-completion stream whose
-    source files live at ``src_paths`` (files or directories).
-
-    LOCAL-FILESYSTEM sizing: the walk below sees nothing on an
-    object-store/HDFS URI (r16 judge finding), in which case the
-    function cannot honor its derive-from-bytes intent — it warns and
-    returns the floor instead of silently under-sizing a large
-    stream. Deployments on remote storage should pin
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` from capacity planning
-    (expected_state_bytes / target_per_store), which wins over the
-    derivation, or size from catalog-known table bytes upstream."""
-    pinned = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
-    ) or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if pinned:
-        return max(1, int(pinned))
-    total = 0
-    for p in src_paths:
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p, followlinks=True):
-                total += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith((".", "_"))
-                )
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    if total == 0 and src_paths:
-        import warnings
-
-        warnings.warn(
-            "stream_shuffle_partitions: no measurable local bytes under "
-            f"{src_paths!r} (non-local path, or empty/missing source); "
-            "falling back to the minimum partition floor — pin "
-            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for remote storage",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    from ..session import default_parallelism
-
-    cores = max(1, default_parallelism())
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES",
-            str(STREAM_STATE_TARGET_BYTES),
-        )
+def _events_partitions(spark: SparkSession, sf_dir: str) -> int:
+    return derived_shuffle_partitions(
+        spark.read.parquet(table_path(sf_dir, "events"))
     )
-    derived = -(-total // target)  # ceil
-    return int(min(max(derived, min(4, cores)), cores))
 
 
 def unload_state_stores(spark: SparkSession) -> None:
@@ -208,21 +141,21 @@ def unload_state_stores(spark: SparkSession) -> None:
 
 @contextlib.contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
-    """Set spark.sql.shuffle.partitions for the duration of one
-    run-to-completion stream (the conf is read when the stream plans its
-    first batch), restoring the session value afterwards so batch
-    queries keep their own sizing.
+    """Set spark.sql.shuffle.partitions while one computation that is
+    sized from its own working set plans its jobs, then restore the
+    session value so other queries keep their own sizing. The callers
+    are run-to-completion streams (the conf is read when the stream
+    plans its first batch) and iterative graph loops (every round's
+    eager job is planned inside the scope).
 
-    CONCURRENCY INVARIANT (r16 judge item 4): the conf is
-    SESSION-GLOBAL, so any query planned by another driver thread on
-    the same SparkSession while this scope is open inherits ``n``.
-    Every current caller holds the scope on the query's own thread and
-    plans only that query's jobs inside it; the one in-repo thread
-    pool (pipeline.handle_batch's per-topic merges) runs INSIDE its
-    pipeline's scope on purpose — the merges are exactly the shuffles
-    being sized. A future caller that plans unrelated queries
-    concurrently must isolate via ``SparkSession.newSession()``
-    (per-session conf) instead of this scope."""
+    The conf is session-global: a query that another driver thread
+    plans on the same SparkSession while the scope is open inherits
+    ``n``. So every caller holds the scope on its own thread and plans
+    only its own jobs inside it. The one thread pool that runs inside
+    a scope, pipeline.handle_batch's per-topic merges, does so on
+    purpose: those merges are the shuffles being sized. A caller that
+    must plan unrelated queries concurrently needs a per-session conf
+    from ``SparkSession.newSession()`` instead of this scope."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -294,7 +227,7 @@ def hourly_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_value",
         "first_user",
     )
-    return _run_to_table(out, spark, "append", _events_partitions(sf_dir))
+    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
 
 
 def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,7 +257,7 @@ def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_value",
         "max_value",
     )
-    return _run_to_table(out, spark, "append", _events_partitions(sf_dir))
+    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,7 +287,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .select("event_id", "user_id", "event_type", "ts_us")
     )
-    return _run_to_table(out, spark, "append", _events_partitions(sf_dir))
+    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,7 +312,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("max_value"),
         F.max("ts_us").alias("last_ts_us"),
     )
-    return _run_to_table(agg, spark, "complete", _events_partitions(sf_dir))
+    return _run_to_table(agg, spark, "complete", _events_partitions(spark, sf_dir))
 
 
 def stream_stream_interval_join(
@@ -427,7 +360,7 @@ def stream_stream_interval_join(
         "b_event_id",
         (F.col("b_ts_us") - F.col("a_ts_us")).alias("delta_us"),
     )
-    return _run_to_table(out, spark, "append", _events_partitions(sf_dir))
+    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
 
 
 def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,7 +388,7 @@ def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         "user_id", "session_start_us", "session_end_us", "n_events"
     )
-    return _run_to_table(out, spark, "append", _events_partitions(sf_dir))
+    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
 
 
 _DOC_STAGE_CACHE: dict[str, str] = {}
@@ -493,8 +426,8 @@ def docs_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import _ensure_session_defaults
 
     _ensure_session_defaults(spark)
-    batch_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
-    raw = spark.readStream.schema(batch_schema).parquet(
+    batch = spark.read.parquet(table_path(sf_dir, "documents"))
+    raw = spark.readStream.schema(batch.schema).parquet(
         _staged_documents_dir(sf_dir)
     )
     norm = F.lower(F.trim(F.col("text")))
@@ -509,7 +442,7 @@ def docs_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped,
         spark,
         "append",
-        stream_shuffle_partitions(table_path(sf_dir, "documents")),
+        derived_shuffle_partitions(batch),
     )
     return survivors.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_unique_docs"),

@@ -77,6 +77,34 @@ def test_ann_lsh_overlaps_bruteforce(spark):
         assert abs(e[pair] - a[pair]) < 1e-9  # scores are exact cosines
 
 
+def test_hyperplane_sign_reads_the_named_column(spark):
+    """The sign expression projects the column it is given by name,
+    even one that needs quoting, and not a column that happens to be
+    called ``v``."""
+    from financial_tracker_etl_spark.ext.similarity import (
+        _hyperplane_sign,
+        plane_weights,
+    )
+
+    dim = 4
+    vec = [1.0, -2.0, 0.5, 3.0]
+    weights = plane_weights(0, dim)
+    proj = sum(x * w for x, w in zip(vec, weights))
+    assert proj != 0
+    # the decoy v projects to 0.0 (sign 1) for both rows
+    df = spark.createDataFrame(
+        [(0, vec, [0.0] * dim), (1, [-x for x in vec], [0.0] * dim)],
+        "id long, `emb vec` array<double>, v array<double>",
+    )
+    got = [
+        r["s"]
+        for r in df.orderBy("id")
+        .select(_hyperplane_sign("emb vec", 0, dim).alias("s"))
+        .collect()
+    ]
+    assert got == ([1, 0] if proj > 0 else [0, 1])
+
+
 def test_simhash_near_dups_have_close_fingerprints(spark):
     docs = load_table(spark, SF_DIR, "documents")
     fp = {r.doc_id: r.simhash for r in simhash_fingerprints(docs).collect()}
@@ -1846,9 +1874,11 @@ def test_contamination_broadcast_guard_both_ways(spark):
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
     )
-    # the small side must be storage-backed: a LocalRelation has no
-    # stats (sizeInBytes = Long.MaxValue), which the guard reads as
-    # too-big by design
+    # the small side must be storage-backed: createDataFrame over
+    # Python rows plans a LogicalRDD here, which has no size statistics
+    # (sizeInBytes = Long.MaxValue) and which the guard reads as too
+    # big by design; a LocalRelation, by contrast, estimates its size
+    # from its rows
     small_dir = tempfile.mkdtemp(prefix="ftes_contam_guard_")
     spark.createDataFrame(
         [(2, "alpha beta gamma delta epsilon")], "doc_id long, text string"

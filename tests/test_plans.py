@@ -588,3 +588,174 @@ def test_windowexec_warning_suppressed(spark):
         "org.apache.spark.sql.execution.window.WindowExec"
     ).getLevel()
     assert str(level) == "ERROR"
+
+
+def _physical_plan(df):
+    """df's physical plan before execution, exchanges inserted."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan
+
+
+def _exchanges(df) -> int:
+    """ShuffleExchange nodes in df's physical plan. A cached relation's
+    own build plan is not a child of its scan, so only exchanges that
+    would run for df itself are counted."""
+    stack, n = [_physical_plan(df)], 0
+    while stack:
+        node = stack.pop()
+        n += node.getClass().getSimpleName() == "ShuffleExchangeExec"
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
+@pytest.fixture
+def four_cores(monkeypatch):
+    """Sizer inputs fixed: 4 cores, no partition-count pins."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    for pin in (
+        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES",
+    ):
+        monkeypatch.delenv(pin, raising=False)
+
+
+def _one_split_docs(spark, tmp_path):
+    """A corpus stored as one small file: its scan plans one split."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3} w{i % 2} tail") for i in range(60)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_doc_shingles_spreads_a_one_split_input(spark, tmp_path, four_cores):
+    """The shingle explode of a corpus read as one split is
+    hash-partitioned on doc_id to the derived count, and a per-doc
+    aggregate over it plans no exchange of its own."""
+    from pyspark.sql import functions as F
+
+    from financial_tracker_etl_spark.ext.dedup import doc_shingles
+    from financial_tracker_etl_spark.partitioning import (
+        derived_shuffle_partitions,
+        planned_partitions,
+    )
+
+    docs = _one_split_docs(spark, tmp_path)
+    assert planned_partitions(docs) == 1
+    n = derived_shuffle_partitions(docs.select("doc_id", "text"))
+    assert n == 4
+    sh = doc_shingles(docs)
+    layout = _physical_plan(sh).outputPartitioning().toString()
+    assert re.fullmatch(rf"hashpartitioning\(doc_id#\d+L, {n}\)", layout), layout
+    assert _exchanges(sh) == 1
+
+    per_doc = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    assert _exchanges(per_doc) == 1
+    # a materialized cache of the shingles keeps the partitioning too
+    cached = sh.persist()
+    try:
+        cached.count()
+        assert _exchanges(cached.groupBy("doc_id").agg(F.min("shingle"))) == 0
+    finally:
+        cached.unpersist()
+
+
+def test_doc_shingles_adds_no_exchange_over_a_wide_input(spark, tmp_path, four_cores):
+    """An input that already runs on at least the derived count of
+    partitions is tokenized where it is. The same holds for a working
+    set far above cores x 64 MB, whose derived count exceeds its
+    partitions: a split per core already fills every core, and
+    re-partitioning it would only move the corpus."""
+    from pyspark.sql import functions as F
+
+    from financial_tracker_etl_spark.ext.dedup import doc_shingles
+    from financial_tracker_etl_spark.partitioning import (
+        derived_shuffle_partitions,
+        planned_partitions,
+    )
+
+    wide = _one_split_docs(spark, tmp_path).repartition(8)
+    assert planned_partitions(wide) == 8
+    assert derived_shuffle_partitions(wide) <= 8
+    assert _exchanges(doc_shingles(wide)) == 1  # the input's own
+
+    huge = spark.range(10_000_000_000, numPartitions=8).select(
+        F.col("id").alias("doc_id"), F.lit("a b c d e").alias("text")
+    )
+    assert planned_partitions(huge) == 8
+    assert derived_shuffle_partitions(huge) > 8
+    assert _exchanges(doc_shingles(huge)) == 0
+
+
+def test_derived_shuffle_partitions_sizing(spark, four_cores, monkeypatch):
+    """Shuffle partitions derive from plan-statistics bytes at 64 MB a
+    partition, with a min(4, cores) floor, no cores cap, and the
+    partition-count pins winning over the derivation (results must
+    never depend on this count)."""
+    from financial_tracker_etl_spark.partitioning import (
+        TARGET_PARTITION_BYTES,
+        derived_shuffle_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    # range() stats are exact: 8 bytes a row
+    small = spark.range(128)
+    # tiny source: the floor (min(4, cores)) applies, never 1
+    assert derived_shuffle_partitions(small) == 4
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert derived_shuffle_partitions(small) == 2
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+
+    # ceil(bytes / target), via the target override
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES", "128")
+    assert derived_shuffle_partitions(small) == 8  # ceil(1024/128)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES")
+
+    # several frames: their bytes add up, ceil((64 MB + 16) / 64 MB) = 2
+    exact = spark.range(TARGET_PARTITION_BYTES // 8)
+    assert derived_shuffle_partitions(exact, spark.range(2)) == 4
+
+    # no cores cap: 80 GB of plan stats on 4 cores gets 64 MB partitions
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    big = spark.range(10_000_000_000)
+    n_big = derived_shuffle_partitions(big)
+    assert n_big == -(-80_000_000_000 // TARGET_PARTITION_BYTES) > 4
+
+    # a plan without size statistics (Long.MaxValue) gets the floor
+    statless = spark.createDataFrame([(1,)], "x long")
+    assert derived_shuffle_partitions(statless) == 4
+
+    # the invariance pin wins over the derivation, the stream pin over both
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
+    assert derived_shuffle_partitions(big) == 7
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "90")
+    assert derived_shuffle_partitions(small) == 90
+
+
+def test_derived_shuffle_partitions_at_sf01_callers(spark, four_cores):
+    """Every caller's sf0.1 source still gets 4 partitions on 4 cores:
+    the events and documents streams and near-dup queries, the
+    two-source graph loops and the request-stream backlog."""
+    import os
+
+    from financial_tracker_etl_spark.catalog import load_table, table_path
+    from financial_tracker_etl_spark.partitioning import (
+        derived_shuffle_partitions,
+    )
+
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip(f"no sf0.1 testdata beside {SF_DIR}")
+    for table in ("events", "documents"):
+        src = spark.read.parquet(table_path(sf01, table))
+        assert derived_shuffle_partitions(src) == 4, table
+    li = load_table(spark, sf01, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf01, "orders").select("o_orderkey", "o_custkey")
+    assert derived_shuffle_partitions(li, orders) == 4
+    # the request-stream backlog the benchmark stages is about 59 MB
+    assert derived_shuffle_partitions(spark.range(59 * 2**20 // 8)) == 4

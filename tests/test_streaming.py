@@ -705,50 +705,6 @@ def test_event_time_ingest_bound_drops_warped_rows(spark, tmp_path):
     assert got.filter(F.col("ts_us").isNull()).collect()[0]["event_id"] == 5
 
 
-def test_stream_shuffle_partitions_sizing(tmp_path, monkeypatch):
-    """Round-16 optimization: stateful-stream shuffle partitions derive
-    from source bytes (64 MB/state partition), with a min(4, cores)
-    floor, a cores cap, and the partition-invariance env pin winning
-    over the derivation (results must never depend on this count)."""
-    from financial_tracker_etl_spark.streaming.windows import (
-        STREAM_STATE_TARGET_BYTES,
-        stream_shuffle_partitions,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-
-    small = tmp_path / "small.parquet"
-    small.write_bytes(b"x" * 1024)
-    # tiny source: the floor (min(4, cores)) applies, never 1
-    assert stream_shuffle_partitions(str(small)) == 4
-
-    # ceil(bytes / target): fake a 3.2 GB source via the target override
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES", "128")
-    assert stream_shuffle_partitions(str(small)) == 8  # ceil(1024/128)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES")
-
-    # cores cap: a source far above cores*target still yields <= cores
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES", "1")
-    assert stream_shuffle_partitions(str(small)) == 32
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES")
-
-    # directory walk sums files, skipping dot/underscore metadata
-    d = tmp_path / "dir"
-    d.mkdir()
-    (d / "part-0.parquet").write_bytes(b"x" * STREAM_STATE_TARGET_BYTES)
-    (d / "part-1.parquet").write_bytes(b"x" * 10)
-    (d / "_SUCCESS").write_bytes(b"x" * (10 * STREAM_STATE_TARGET_BYTES))
-    assert stream_shuffle_partitions(str(d)) == 4  # ceil(64MB+10/64MB)=2 -> floor 4
-
-    # invariance pin wins over the derivation
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
-    assert stream_shuffle_partitions(str(d)) == 7
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "90")
-    assert stream_shuffle_partitions(str(d)) == 90
-
-
 def test_scoped_shuffle_partitions_restores(spark):
     from financial_tracker_etl_spark.streaming.windows import (
         scoped_shuffle_partitions,
@@ -759,38 +715,6 @@ def test_scoped_shuffle_partitions_restores(spark):
     with scoped_shuffle_partitions(spark, 5):
         assert spark.conf.get(key) == "5"
     assert spark.conf.get(key) == before
-
-
-def test_stream_shuffle_partitions_warns_on_unmeasurable_path(
-    tmp_path, monkeypatch
-):
-    """r16 judge item 3: on a path the local walk cannot size (remote
-    URI, missing dir), the derivation must not silently under-size —
-    it falls back to the floor AND warns, pointing at the env pin."""
-    import warnings
-
-    from financial_tracker_etl_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        n = stream_shuffle_partitions(str(tmp_path / "nope"))
-    assert n == 4  # the min(4, cores) floor
-    assert any(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS" in str(w.message)
-        for w in caught
-    )
-    # a measurable path stays silent
-    f = tmp_path / "real.parquet"
-    f.write_bytes(b"x" * 128)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        stream_shuffle_partitions(str(f))
-    assert not [w for w in caught if "no measurable" in str(w.message)]
 
 
 def test_seed_from_files_owns_layout_and_validates(spark, tmp_path):
@@ -837,3 +761,28 @@ def test_seed_from_files_owns_layout_and_validates(spark, tmp_path):
         ).withColumn("_deleted", F.lit(False))
     )
     assert [r["v"] for r in st.read_merged().collect()] == [11.0]
+
+
+def test_seed_from_files_rejects_null_tombstone_flag(spark, tmp_path):
+    """A copied seed bypasses merge()'s NULL-to-False normalization, and
+    read_merged's ~_deleted filter would drop a never-deleted key whose
+    flag is NULL; the tombstone store refuses such a seed."""
+    from financial_tracker_etl_spark.streaming.state import (
+        TombstoneLogState,
+    )
+
+    seed_dir = str(tmp_path / "seed")
+    spark.createDataFrame(
+        [("A", 1, 10.0, False), ("B", 1, 20.0, None)],
+        "k string, _ver int, v double, _deleted boolean",
+    ).coalesce(1).write.parquet(seed_dir)
+    st = TombstoneLogState(
+        spark, str(tmp_path / "state"), keys=["k"], version_cols=["_ver"]
+    )
+    with pytest.raises(ValueError, match="NULL values in \\['_deleted'\\]"):
+        st.seed_from_files(seed_dir)
+    # refused before any file lands: the state is still empty
+    assert not st.exists() or not any(
+        f.endswith(".parquet") for f in os.listdir(st.path)
+    )
+    assert st._n_deltas == 0
