@@ -190,15 +190,6 @@ def doc_shingle_sets(
 CONTAM_BROADCAST_CAP_BYTES = 256 << 20
 
 
-def _estimated_plan_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate for ``df`` (driver-only; no
-    job). -1 for a plan without size statistics, which the caller
-    treats as TOO BIG, because the guard exists to prevent an
-    unbounded broadcast."""
-    est = plan_bytes(df)
-    return -1 if est is None else est
-
-
 def contamination_check(
     docs: DataFrame,
     bench_docs: DataFrame,
@@ -226,8 +217,8 @@ def contamination_check(
         .select(F.explode("shingles").alias("shingle"))
         .distinct()
     )
-    est = _estimated_plan_bytes(bench_docs)
-    if 0 <= est <= CONTAM_BROADCAST_CAP_BYTES:
+    est = plan_bytes(bench_docs)
+    if est is not None and est <= CONTAM_BROADCAST_CAP_BYTES:
         bench_sh = F.broadcast(bench_sh)
     exploded = corpus_sh.select(
         "doc_id",

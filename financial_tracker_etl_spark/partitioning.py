@@ -36,18 +36,30 @@ from .session import default_parallelism
 
 TARGET_PARTITION_BYTES = 64 << 20
 
-# sizeInBytes of a plan without size statistics (a LogicalRDD, for
-# example) is spark.sql.defaultSizeInBytes, Long.MaxValue by default
-_UNMEASURED_BYTES = (1 << 63) - 1
+
+def _sql_conf(df: DataFrame):
+    return df._jdf.sparkSession().sessionState().conf()
 
 
 def plan_bytes(df: DataFrame) -> int | None:
     """Catalyst's ``sizeInBytes`` estimate for ``df``, driver-side and
-    without running a job. None when the plan has no size statistics,
-    for which Catalyst reports Long.MaxValue: sizing partitions from
-    that would ask for billions of them."""
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return None if est >= _UNMEASURED_BYTES else est
+    without running a job. None when the plan is not measured.
+
+    A leaf without size statistics (the LogicalRDD that
+    ``createDataFrame`` plans, for example) reports
+    ``spark.sql.defaultSizeInBytes``, and the operators above it scale
+    that placeholder instead of passing it on: a narrowing Project
+    keeps only its share of the row width. So the test is made on the
+    leaves as well as the root; sizing partitions from a scaled
+    placeholder would ask for billions of them."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    unmeasured = _sql_conf(df).defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        if int(leaves.apply(i).stats().sizeInBytes()) >= unmeasured:
+            return None
+    est = int(plan.stats().sizeInBytes())
+    return None if est >= unmeasured else est
 
 
 def _cores() -> int:
@@ -74,34 +86,74 @@ def derived_shuffle_partitions(*dfs: DataFrame) -> int:
     return max(min(4, _cores()), -(-total // target))
 
 
+# operators that keep their child's partitions
+_NARROW = frozenset({"Project", "Filter", "Generate", "Sample"})
+# operators the planner puts behind a shuffle of the session count
+_SHUFFLED = frozenset({"Aggregate", "Window", "Join"})
+
+
 def planned_partitions(df: DataFrame) -> int:
-    """Number of partitions ``df``'s physical plan will run with, read
-    from the plan without running it: the output partitioning when an
-    exchange fixes it, else the split count of the file scan that feeds
-    the pipeline (through narrow operators and the streamed side of a
-    broadcast join). 0 when the plan cannot tell without executing,
-    e.g. over a cached relation."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        # the pre-execution physical plan, exchanges already inserted
-        plan = plan.executedPlan()
-    return _node_partitions(plan)
+    """Number of partitions ``df`` will run with, read from its
+    optimized logical plan without planning or running it: the count
+    of the nearest repartition, or of the source under a chain of
+    narrow operators (and under the streamed side of a join whose
+    other side is hinted for broadcast). A shuffling operator runs on
+    the session count. 0 when the plan does not say, e.g. over a cached
+    relation."""
+    conf = _sql_conf(df)
+    node = df._jdf.queryExecution().optimizedPlan()
+    while True:
+        kind = node.getClass().getSimpleName()
+        if kind in _NARROW:
+            node = node.child()
+        elif kind == "Join" and _broadcast_hinted(node.hint().rightHint()):
+            node = node.left()
+        elif kind in ("Repartition", "RepartitionByExpression"):
+            return node.numPartitions()
+        elif kind in _SHUFFLED:
+            return conf.numShufflePartitions()
+        elif kind == "LogicalRelation":
+            return _file_splits(df, node)
+        elif kind == "LogicalRDD":
+            return node.rdd().getNumPartitions()
+        elif kind == "Range":
+            slices = node.numSlices()
+            if slices.isDefined():
+                return slices.get()
+            return df._jdf.sparkSession().leafNodeDefaultParallelism()
+        else:
+            return 0
 
 
-def _node_partitions(node) -> int:
-    n = node.outputPartitioning().numPartitions()
-    if n > 0:
-        return n
-    kind = node.getClass().getSimpleName()
-    if kind == "FileSourceScanExec":
-        # split packing is done at planning time; no file is read
-        return node.inputRDD().getNumPartitions()
-    if kind == "BroadcastHashJoinExec":
-        return _node_partitions(node.streamedPlan())
-    children = node.children()
-    if children.size() == 1:
-        return _node_partitions(children.head())
-    return 0
+def _broadcast_hinted(hint) -> bool:
+    return (
+        hint.isDefined()
+        and hint.get().strategy().isDefined()
+        and hint.get().strategy().get().displayName() == "broadcast"
+    )
+
+
+def _file_splits(df: DataFrame, relation) -> int:
+    """Splits of a file scan, as Spark's file-partition packing makes
+    them for one splittable file of the relation's size: at most
+    ``maxPartitionBytes`` each, and no smaller than the open cost or
+    the bytes spread over the leaf parallelism. Many small files pack
+    into more splits than that, so the estimate errs toward adding an
+    exchange. A large file that cannot be split (gzip text) runs as one
+    split but reads here as many."""
+    if relation.relation().getClass().getSimpleName() != "HadoopFsRelation":
+        return 0
+    conf = _sql_conf(df)
+    nbytes = int(relation.stats().sizeInBytes())
+    open_cost = conf.filesOpenCostInBytes()
+    min_splits = conf.filesMinPartitionNum()
+    per_core = (nbytes + open_cost) // (
+        min_splits.get()
+        if min_splits.isDefined()
+        else df._jdf.sparkSession().leafNodeDefaultParallelism()
+    )
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+    return max(1, -(-nbytes // split))
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:
@@ -114,9 +166,11 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     (an explode) then runs on one core. The exchange is added only
     when the plan runs on fewer partitions than ``min(count, cores)``:
     a large scan already has a split per core or more, and
-    re-partitioning it would only move bytes. Hashing on the key (not
-    round-robin) lets a later per-key aggregate reuse the
-    partitioning instead of planning its own exchange."""
+    re-partitioning it would only move bytes. Both counts are read
+    from the one optimized plan, so deciding plans nothing physical.
+    Hashing on the key (not round-robin) lets a later per-key
+    aggregate reuse the partitioning instead of planning its own
+    exchange."""
     n = derived_shuffle_partitions(df)
     if planned_partitions(df) >= min(n, _cores()):
         return df

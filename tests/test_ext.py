@@ -1865,9 +1865,9 @@ def test_contamination_broadcast_guard_both_ways(spark):
 
     from financial_tracker_etl_spark.ext.quality import (
         CONTAM_BROADCAST_CAP_BYTES,
-        _estimated_plan_bytes,
         contamination_check,
     )
+    from financial_tracker_etl_spark.partitioning import plan_bytes
 
     import tempfile
 
@@ -1884,7 +1884,7 @@ def test_contamination_broadcast_guard_both_ways(spark):
         [(2, "alpha beta gamma delta epsilon")], "doc_id long, text string"
     ).write.mode("overwrite").parquet(small_dir)
     small_bench = spark.read.parquet(small_dir)
-    assert 0 <= _estimated_plan_bytes(small_bench) <= CONTAM_BROADCAST_CAP_BYTES
+    assert 0 <= plan_bytes(small_bench) <= CONTAM_BROADCAST_CAP_BYTES
     plan_small = contamination_check(
         docs, small_bench
     )._jdf.queryExecution().optimizedPlan().toString()
@@ -1895,7 +1895,7 @@ def test_contamination_broadcast_guard_both_ways(spark):
         F.col("id").alias("doc_id"),
         F.lit("alpha beta gamma delta epsilon").alias("text"),
     )
-    assert _estimated_plan_bytes(big) > CONTAM_BROADCAST_CAP_BYTES
+    assert plan_bytes(big) > CONTAM_BROADCAST_CAP_BYTES
     plan_big = contamination_check(
         docs, big
     )._jdf.queryExecution().optimizedPlan().toString()

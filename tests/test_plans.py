@@ -737,6 +737,44 @@ def test_derived_shuffle_partitions_sizing(spark, four_cores, monkeypatch):
     assert derived_shuffle_partitions(small) == 90
 
 
+def test_unmeasured_leaf_sizes_to_the_floor(spark, four_cores):
+    """A narrowing select over a frame without size statistics scales
+    the placeholder estimate below defaultSizeInBytes; the plan still
+    counts as unmeasured, whatever that conf is set to, and the
+    near-duplicate operators run over such a corpus."""
+    from financial_tracker_etl_spark.ext.dedup import (
+        minhash_signatures,
+        shingle_jaccard_pairs,
+    )
+    from financial_tracker_etl_spark.partitioning import (
+        derived_shuffle_partitions,
+        plan_bytes,
+    )
+
+    rows = [(i, f"w{i % 3} w{i % 2} tail end", "src") for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    narrowed = docs.select("doc_id", "text")
+    assert plan_bytes(narrowed) is None
+    assert derived_shuffle_partitions(narrowed) == 4
+
+    key = "spark.sql.defaultSizeInBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    try:
+        assert plan_bytes(docs.select("doc_id", "text")) is None
+    finally:
+        spark.conf.set(key, prior)
+
+    # texts repeat every 6 docs: each doc's twin is an exact duplicate
+    exact = {
+        (r.doc1, r.doc2)
+        for r in shingle_jaccard_pairs(docs).collect()
+        if r.jaccard == 1.0
+    }
+    assert exact == {(i, i + 6) for i in range(6)}
+    assert minhash_signatures(docs, k=8).count() == len(rows)
+
+
 def test_derived_shuffle_partitions_at_sf01_callers(spark, four_cores):
     """Every caller's sf0.1 source still gets 4 partitions on 4 cores:
     the events and documents streams and near-dup queries, the
