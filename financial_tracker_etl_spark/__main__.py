@@ -25,6 +25,7 @@ def build_parser() -> argparse.ArgumentParser:
         s = sub.add_parser(
             name,
             help="execute and print per-operator runtime SQLMetrics"
+            " and the stage totals of every job the query ran"
             if name == "profile"
             else None,
         )
@@ -72,12 +73,23 @@ def main(argv: list[str] | None = None) -> int:
             print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
             return 2
         spark = get_spark(f"cli-{args.cmd}")
-        df = reg[args.query].fn(spark, args.sf_dir)
         if args.cmd == "profile":
-            from .profile import collect_metrics, format_profile
+            from .profile import (
+                collect_metrics,
+                format_profile,
+                format_stage_totals,
+                stage_delta_metrics,
+                stage_snapshot,
+            )
 
-            print(format_profile(collect_metrics(df)))
-        elif args.cmd == "explain":
+            # mark before fn: queries run eager jobs while building
+            mark = stage_snapshot(spark)
+            rows = collect_metrics(reg[args.query].fn(spark, args.sf_dir))
+            print(format_profile(rows))
+            print(format_stage_totals(stage_delta_metrics(spark, mark)))
+            return 0
+        df = reg[args.query].fn(spark, args.sf_dir)
+        if args.cmd == "explain":
             df.explain("formatted")
         else:
             df.show(args.limit, truncate=False)

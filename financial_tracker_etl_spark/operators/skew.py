@@ -86,8 +86,8 @@ def salted_window_count(
     totals, and the totals join back on the key — a sort-merge join
     AQE CAN skew-split, unlike the window.
 
-    Measured (scripts/skew_probe_r9.py, 40%-hub corpus, medians of
-    interleaved draws): plain-window/salted = 1.45x at 2M rows, 2.07x
+    Measured (BASELINE.md round-9 skew probe, 40%-hub corpus, medians
+    of interleaved draws): plain-window/salted = 1.45x at 2M rows, 2.07x
     at 4M — the gap grows with scale. On NATURALLY distributed keys
     the plain window is cheaper (no distinct+join): the measured
     crossover sits between 10% and 20% head share at 32 shuffle

@@ -9,13 +9,19 @@ KB-sized, a filter that actually pruned). The driver-side cost is one
 pass over the plan tree; execution happens via the query's own
 ``toRdd().count()`` so no result rows ever reach the driver.
 
-Usage:  python -m financial_tracker_etl_spark profile <query> [sf_dir]
+The final plan hides the jobs behind persisted or checkpointed
+intermediates; :func:`stage_delta_metrics` covers those, reading the
+driver's status store (UI on or off) for every job a query launched.
+
+Usage:  python -m financial_tracker_etl_spark profile <query> [--sf-dir DIR]
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 
@@ -95,7 +101,7 @@ def plan_io_summary(rows: list[NodeMetrics]) -> dict:
     per-node ``spillSize`` SQLMetric, which covers operator spill
     (sorts/aggs/joins) only — shuffle-WRITE spill never appears in node
     SQLMetrics. Use :func:`stage_delta_metrics` (task-level
-    memory/diskBytesSpilled via the UI REST API) for the inclusive
+    memory/diskBytesSpilled from the status store) for the inclusive
     number.
     """
     shuffle_bytes: list[int] = []
@@ -121,12 +127,12 @@ def plan_io_summary(rows: list[NodeMetrics]) -> dict:
     }
 
 
-# Stage-level IO keys from the UI REST API (/api/v1/.../stages). Unlike
-# final-plan SQLMetrics, these cover EVERY job a query ran — including
+# Stage-level IO keys from the in-process status store. Unlike
+# final-plan SQLMetrics, these cover EVERY job a query ran, including
 # the persist/count jobs behind cached intermediates (pagerank's
-# per-iteration exchanges, LSH's candidate build), which the final
-# adaptive plan hides behind InMemoryTableScan (round-13 VERDICT task
-# 3) — and their spill counters include shuffle-write spill.
+# per-iteration exchanges, LSH's candidate build) that the final
+# adaptive plan hides behind InMemoryTableScan, and their spill
+# counters include shuffle-write spill.
 STAGE_IO_KEYS = (
     "shuffleWriteBytes",
     "shuffleReadBytes",
@@ -136,45 +142,119 @@ STAGE_IO_KEYS = (
 )
 
 
-def stage_snapshot(spark) -> dict[tuple[int, int], dict] | None:
-    """Map (stageId, attemptId) -> stage record from the UI REST API,
-    or None when the UI is disabled/unreachable (detection unavailable,
-    not zero). get_spark raises spark.ui.retainedStages to 20000 when
-    the UI is on, so eviction between snapshots is not a practical
-    concern at bench scale."""
-    import json as _json
-    import urllib.request
+class StageRecordsEvicted(RuntimeError):
+    """A job or stage of a delta is no longer in the status store."""
 
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app_id = spark.sparkContext.applicationId
+
+class _StatusStore:
+    """Job and stage records of the driver's ``AppStatusStore`` as
+    dicts. The store is filled whether or not the UI runs. A job that
+    is not in the store raises KeyError; a stage that is not in it
+    reads as no attempts (Spark's ``stageData`` does not raise)."""
+
+    def __init__(self, spark) -> None:
+        sc = spark.sparkContext
+        self._store = sc._jsc.sc().statusStore()
+        jvm = sc._jvm
+        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        self._mapper.registerModule(
+            jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule()
+        )
+        self._empty = jvm.java.util.ArrayList()
+        self._no_quantiles = sc._gateway.new_array(jvm.double, 0)
+
+    def _json(self, obj):
+        return json.loads(self._mapper.writeValueAsString(obj))
+
+    def job(self, job_id: int) -> dict:
+        try:
+            return self._json(self._store.job(job_id))
+        except Py4JJavaError as exc:
+            name = exc.java_exception.getClass().getName()
+            if name == "java.util.NoSuchElementException":
+                raise KeyError(job_id) from exc
+            raise
+
+    def stage_attempts(self, stage_id: int) -> list[dict]:
+        return self._json(
+            self._store.stageData(
+                stage_id, False, self._empty, False, self._no_quantiles
+            )
+        )
+
+
+def stage_snapshot(spark) -> tuple[int, int]:
+    """Mark for :func:`stage_delta_metrics`: the scheduler's next job
+    and stage ids, so the delta is every job launched after this call."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    return int(dag.nextJobId()), int(dag.nextStageId())
+
+
+def stage_delta_metrics(spark, before: tuple[int, int]) -> dict:
+    """Aggregate STAGE_IO_KEYS over every stage of every job launched
+    since the ``before`` mark. The listener bus fills the store
+    asynchronously, so it is drained first. Raises
+    StageRecordsEvicted rather than return short counts when
+    retention (``spark.ui.retainedJobs``/``retainedStages``) has
+    dropped part of the delta."""
+    jsc = spark.sparkContext._jsc.sc()
+    end_job = int(jsc.dagScheduler().nextJobId())
+    jsc.listenerBus().waitUntilEmpty()
+    return stage_totals(_StatusStore(spark), before, end_job)
+
+
+def stage_totals(store, before: tuple[int, int], end_job: int) -> dict:
+    """Totals over jobs ``[before[0], end_job)`` read from ``store``
+    (``job(id)`` and ``stage_attempts(id)``, as :class:`_StatusStore`
+    returns them): STAGE_IO_KEYS summed over the stage attempts that
+    ran, plus ``n_jobs``, ``n_stages`` and
+    ``max_stage_shuffle_write_bytes``. Stages created before the mark
+    are excluded: a job that reuses an earlier shuffle lists that
+    stage as skipped, and its work was counted before."""
+    first_job, first_stage = before
     try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages", timeout=10
-        ) as resp:
-            stages = _json.load(resp)
-    except Exception:
-        return None
-    return {(s["stageId"], s["attemptId"]): s for s in stages}
-
-
-def stage_delta_metrics(spark, before: dict | None) -> dict | None:
-    """Aggregate STAGE_IO_KEYS over every stage that appeared since the
-    ``before`` snapshot — i.e. all stages of all jobs the measured query
-    ran, identified by (stageId, attemptId) rather than cumulative sums
-    so eviction of OLD stages cannot skew the delta. None when the UI
-    is off (either snapshot unavailable)."""
-    after = stage_snapshot(spark)
-    if before is None or after is None:
-        return None
-    new = [s for key, s in after.items() if key not in before]
-    out = {k: sum(s.get(k, 0) for s in new) for k in STAGE_IO_KEYS}
-    out["n_stages"] = len(new)
+        jobs = [store.job(j) for j in range(first_job, end_job)]
+    except KeyError as exc:
+        raise StageRecordsEvicted(
+            f"job {exc} of [{first_job}, {end_job}) was evicted"
+        ) from exc
+    stage_ids = sorted(
+        {s for job in jobs for s in job["stageIds"] if s >= first_stage}
+    )
+    ran, missing = [], []
+    for sid in stage_ids:
+        attempts = store.stage_attempts(sid)
+        if not attempts:
+            missing.append(sid)
+        ran += [a for a in attempts if a.get("status") != "SKIPPED"]
+    # Retention drops skipped stages first, and those carry no work; a
+    # missing stage matters only when the jobs ran more stages than
+    # were read.
+    n_read = len({a["stageId"] for a in ran})
+    n_run = sum(job["numCompletedStages"] + job["numFailedStages"] for job in jobs)
+    if missing and n_read < n_run:
+        raise StageRecordsEvicted(
+            f"evicted stages {missing}: the jobs ran {n_run}, {n_read} read"
+        )
+    out = {k: sum(a.get(k) or 0 for a in ran) for k in STAGE_IO_KEYS}
+    out["n_jobs"] = len(jobs)
+    out["n_stages"] = len(ran)
     out["max_stage_shuffle_write_bytes"] = max(
-        (s.get("shuffleWriteBytes", 0) for s in new), default=0
+        (a.get("shuffleWriteBytes") or 0 for a in ran), default=0
     )
     return out
+
+
+def format_stage_totals(d: dict) -> str:
+    """One line of :func:`stage_delta_metrics` totals."""
+    return (
+        f"stages: {d['n_jobs']} jobs, {d['n_stages']} stages | "
+        f"shuffle read {d['shuffleReadBytes']} B, "
+        f"shuffle write {d['shuffleWriteBytes']} B, "
+        f"input {d['inputBytes']} B, "
+        f"spill {d['memoryBytesSpilled']} B memory / "
+        f"{d['diskBytesSpilled']} B disk"
+    )
 
 
 _KEY_METRICS = (

@@ -147,9 +147,9 @@ def get_spark(app_name: str = "financial-tracker-etl-spark") -> SparkSession:
         # any multi-query session — one bench draw's ~18 other queries
         # generate >100 codegen units, evicting each query's compiled
         # classes so every draw pays Janino recompile + cold JIT again.
-        # Measured (scripts/codecache_ab_r12.py): in-context pagerank
-        # 6.1-6.2 s at the default vs 3.8-4.6 s at 5000 — this knob, not
-        # "indivisible JVM context cost", was the round-11/12 bench-vs-
+        # Measured (BASELINE.md, round-12 codegen-cache A/B): in-context
+        # pagerank 6.1-6.2 s at the default vs 3.8-4.6 s at 5000 — this
+        # knob, not "indivisible JVM context cost", was the bench-vs-
         # isolated gap. Static conf: applies when this factory launches
         # the JVM; metaspace stays bounded by the distinct plans actually
         # compiled (code cache measured at <65% of its 240 MB reserve
@@ -157,20 +157,11 @@ def get_spark(app_name: str = "financial-tracker-etl-spark") -> SparkSession:
         # rule + at-scale rationale: README "Cluster deployment" notes.
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_MAX_ENTRIES)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (startup cost, port churn in tests); the
-        # memory soak sets SPARK_GRAFT_UI=1 to read task-level spill
-        # (memoryBytesSpilled/diskBytesSpilled) from the /api/v1 REST
-        # endpoint — shuffle-write spill never reaches node SQLMetrics
+        # UI off by default (startup cost, port churn in tests).
+        # SPARK_GRAFT_UI=1 is only for a person who wants to look at
+        # the UI: stage metrics come from the status store, which the
+        # driver keeps with the UI off too (profile.stage_delta_metrics)
         .config("spark.ui.enabled", "true" if _ui_enabled() else "false")
-        # keep the full stage history resolvable while the UI is on:
-        # the memory soak diffs cumulative task-level spill across the
-        # /api/v1 stages list, and the default retainedStages=1000 can
-        # evict stages mid-soak, silently corrupting the before/after
-        # deltas (round-11 ADVICE)
-        .config(
-            "spark.ui.retainedStages",
-            "20000" if _ui_enabled() else "1000",
-        )
         # managed tables (bucketed state) live in scratch space, never the repo
         .config(
             "spark.sql.warehouse.dir",

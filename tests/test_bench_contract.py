@@ -227,32 +227,12 @@ def test_ui_flag_rejects_falsey_spellings(monkeypatch):
         assert _ui_enabled(), val
 
 
-def test_memsoak_negative_task_delta_is_detection_invalid():
-    """Stage eviction between UI snapshots shrinks the cumulative
-    sums; the soak must report None (detection-invalid), never a
-    negative or silently-wrong 'no spill' (round-11 ADVICE low)."""
-    import importlib.util
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parents[1]
-    spec = importlib.util.spec_from_file_location(
-        "memsoak_r10", root / "scripts" / "memsoak_r10.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert mod.task_spill_delta((10, 20), (15, 22)) == [5, 2]
-    assert mod.task_spill_delta((10, 20), (5, 22)) is None  # evicted
-    assert mod.task_spill_delta(None, (1, 2)) is None
-    assert mod.task_spill_delta((1, 2), None) is None
-    assert mod.task_spill_delta((0, 0), (0, 0)) == [0, 0]
-
-
 def test_codegen_class_cache_sized_for_multi_query_sessions(spark):
     """The 100-entry default codegen class cache thrashes across a
     bench draw's ~19 queries, forcing Janino recompile + cold JIT of
     every query's generated classes on every draw — measured as the
     round-11/12 pagerank bench-vs-isolated gap (6.1-6.2 s in-context
-    at the default vs 3.8-4.6 s at 5000; scripts/codecache_ab_r12.py).
+    at the default vs 3.8-4.6 s at 5000; BASELINE.md round-12 A/B).
     Static conf, so it must come from the session factory."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000"
 

@@ -1,27 +1,28 @@
-"""Shuffle/spill audit promoted from script to test contract
-(round-13 VERDICT task 2).
+"""Shuffle/spill contract over every bench-flagged registry query.
 
-scripts/shuffle_audit_r13.py proved the whole bench set spill-free
-with bounded exchanges at sf0.1, but only ran when someone remembered
-to run it. This module asserts the same invariants automatically at
-sf0.01 over every bench-flagged registry query, so a future plan
-change that introduces a fat shuffle or an operator spill trips the
-suite instead of waiting for a manual audit:
+The suite asserts at sf0.01, on uniform and on hub-skewed input, that
+the bench set is spill-free with bounded exchanges, so a plan change
+that introduces a fat shuffle or a spill fails here. Each query is
+measured two ways:
 
-- zero operator spill (``spillSize`` SQLMetrics, counted once per
-  physical node — ``plan_io_summary`` skips ReusedExchange aliases);
-- per-query max-exchange ceiling: every ceiling is >=4x the round-14
-  measured value at sf0.01 (measured table in BASELINE.md round-14
-  section), so in-band variation passes and a shape regression (a new
-  unexpectedly-fat exchange) fails.
+- the final adaptive plan's SQLMetrics (``plan_io_summary``, each
+  physical node counted once): zero operator spill and a per-query
+  max-exchange ceiling;
+- the stage records of every job the query launched, read from the
+  driver's status store with the UI off (``stage_delta_metrics``):
+  zero task spill, memory and disk, which includes shuffle-write
+  spill, and a per-query max-stage shuffle-write ceiling.
 
-Scope: the final-plan walk cannot see exchanges that ran in jobs
-behind persisted intermediates (purchase_graph_pagerank,
-minhash_lsh_near_dups report 0 here by construction) and node
-SQLMetrics never include shuffle-WRITE spill; both are covered by the
-stage-level REST path in scripts/shuffle_audit_r14.py
-(profile.stage_delta_metrics), which needs SPARK_GRAFT_UI=1 and so
-runs as the per-round audit rather than in this UI-less suite.
+The stage path also sees jobs behind persisted or checkpointed
+intermediates, which the final plan hides behind InMemoryTableScan:
+purchase_graph_pagerank and minhash_lsh_near_dups report 0 on the
+plan path but 923,619 B and 85,722 B max stage shuffle write here.
+
+Every ceiling was set at >=4x a value measured at sf0.01, with a 1 MB
+floor, so row-count jitter passes and a shape regression (a projection
+lost before a shuffle, a broadcast demoted to exchange-both-sides)
+fails. The exchange ceilings come from the BASELINE.md round-14 table;
+the stage ceilings from measurements of the current tree.
 """
 
 from __future__ import annotations
@@ -35,9 +36,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from financial_tracker_etl_spark.profile import (  # noqa: E402
     NodeMetrics,
+    StageRecordsEvicted,
     collect_metrics,
     plan_io_summary,
     stage_delta_metrics,
+    stage_snapshot,
+    stage_totals,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -61,6 +65,20 @@ EXCHANGE_CEILING = {
     "duplicate_span_stats": 4 * MB,  # measured 983,541
 }
 
+# Max single-stage shuffle write per bench query at sf0.01 (bytes),
+# over every job the query ran. Measured values are the larger of the
+# uniform and skewed runs; ceilings follow the same >=4x / 1 MB rule.
+DEFAULT_STAGE_CEILING = 1 * MB
+STAGE_SHUFFLE_CEILING = {
+    "duplicate_span_stats": 6 * MB,  # measured 1,405,510
+    "stream_upsert_market_data": 5 * MB,  # measured 1,099,340 (skewed)
+    "purchase_graph_pagerank": 4 * MB,  # measured 923,619
+    "doc_price_indicators": 3 * MB,  # measured 681,632 (skewed)
+    "asof_quote_join": 2 * MB,  # measured 420,160
+    "top_revenue_customers": 2 * MB,  # measured 281,083
+    "events_hourly_rollup": 2 * MB,  # measured 258,166
+}
+
 
 def _bench_specs():
     from financial_tracker_etl_spark.queries import registry
@@ -72,21 +90,39 @@ def _bench_specs():
     }
 
 
-def test_bench_set_spill_free_and_exchanges_bounded(spark):
+def _audit_bench_set(spark, sf_dir: str) -> list[str]:
+    """Run every bench query on ``sf_dir`` and return its contract
+    violations, plan path and stage path both."""
     specs = _bench_specs()
     assert len(specs) == 19, sorted(specs)
     failures = []
     for name, spec in specs.items():
         spark.catalog.clearCache()
-        summary = plan_io_summary(collect_metrics(spec.fn(spark, SF_DIR)))
-        ceiling = EXCHANGE_CEILING.get(name, DEFAULT_CEILING)
+        mark = stage_snapshot(spark)  # before fn: fn runs eager jobs
+        summary = plan_io_summary(collect_metrics(spec.fn(spark, sf_dir)))
+        stages = stage_delta_metrics(spark, mark)
         if summary["spill_bytes"] != 0:
             failures.append(f"{name}: operator spill {summary['spill_bytes']} B")
+        ceiling = EXCHANGE_CEILING.get(name, DEFAULT_CEILING)
         if summary["shuffle_max_exchange_bytes"] > ceiling:
             failures.append(
                 f"{name}: max exchange {summary['shuffle_max_exchange_bytes']} B"
                 f" > ceiling {ceiling} B"
             )
+        spill = stages["memoryBytesSpilled"] + stages["diskBytesSpilled"]
+        if spill != 0:
+            failures.append(f"{name}: task spill {spill} B")
+        ceiling = STAGE_SHUFFLE_CEILING.get(name, DEFAULT_STAGE_CEILING)
+        if stages["max_stage_shuffle_write_bytes"] > ceiling:
+            failures.append(
+                f"{name}: max stage shuffle write"
+                f" {stages['max_stage_shuffle_write_bytes']} B > ceiling {ceiling} B"
+            )
+    return failures
+
+
+def test_bench_set_spill_free_and_exchanges_bounded(spark):
+    failures = _audit_bench_set(spark, SF_DIR)
     assert not failures, "\n".join(failures)
 
 
@@ -156,38 +192,60 @@ def test_collect_metrics_flags_reused_descendants(spark):
     assert deduped < naive
 
 
-def test_stage_delta_metrics_identifies_new_stages(monkeypatch):
-    """Stage deltas are computed from NEW (stageId, attemptId) keys,
-    not cumulative-sum subtraction, so old-stage eviction cannot skew
-    the delta; None degrades when the UI is off."""
-    from financial_tracker_etl_spark import profile
+def test_stage_delta_metrics_counts_real_stages(spark):
+    """The status-store delta sees the jobs and stages a groupBy ran,
+    with the UI off, and a delta over no work is all zeros."""
+    from pyspark.sql import functions as F
 
-    before = {(1, 0): {"stageId": 1, "attemptId": 0, "shuffleWriteBytes": 999}}
-    after = dict(before)
-    after[(2, 0)] = {
-        "stageId": 2,
-        "attemptId": 0,
-        "shuffleWriteBytes": 50,
-        "shuffleReadBytes": 50,
-        "inputBytes": 10,
-        "memoryBytesSpilled": 3,
-        "diskBytesSpilled": 4,
-    }
-    after[(3, 0)] = {
-        "stageId": 3,
-        "attemptId": 0,
-        "shuffleWriteBytes": 70,
-    }
-    monkeypatch.setattr(profile, "stage_snapshot", lambda spark: after)
-    d = stage_delta_metrics(None, before)
-    assert d["shuffleWriteBytes"] == 120
-    assert d["max_stage_shuffle_write_bytes"] == 70
-    assert d["memoryBytesSpilled"] == 3 and d["diskBytesSpilled"] == 4
-    assert d["n_stages"] == 2
-    # UI off in either direction -> None (detection unavailable)
-    assert stage_delta_metrics(None, None) is None
-    monkeypatch.setattr(profile, "stage_snapshot", lambda spark: None)
-    assert stage_delta_metrics(None, before) is None
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    mark = stage_snapshot(spark)
+    spark.range(0, 10_000, numPartitions=4).groupBy(
+        (F.col("id") % 7).alias("k")
+    ).count().collect()
+    d = stage_delta_metrics(spark, mark)
+    assert d["n_jobs"] >= 1
+    assert d["n_stages"] >= 2  # map side + post-shuffle reduce
+    assert d["shuffleWriteBytes"] > 0
+    assert d["max_stage_shuffle_write_bytes"] > 0
+    assert d["memoryBytesSpilled"] == d["diskBytesSpilled"] == 0
+
+    idle = stage_delta_metrics(spark, stage_snapshot(spark))
+    assert set(idle.values()) == {0}, idle
+
+
+def test_stage_totals_raise_when_a_record_was_evicted():
+    """Retention can drop the oldest job and stage records; a delta
+    that spans a dropped job, or a dropped stage that ran, raises
+    instead of returning short counts."""
+
+    class _Store:
+        def __init__(self):
+            counts = {"numCompletedStages": 2, "numFailedStages": 0}
+            self.jobs = {5: {"stageIds": [10, 11], **counts},
+                         7: {"stageIds": [12, 13, 14], **counts}}
+            self.stages = {
+                12: [{"stageId": 12, "status": "COMPLETE", "shuffleWriteBytes": 1}],
+                14: [{"stageId": 14, "status": "SKIPPED", "shuffleWriteBytes": 0}],
+            }
+
+        def job(self, job_id):
+            return self.jobs[job_id]  # job 6 evicted: KeyError
+
+        def stage_attempts(self, stage_id):
+            return self.stages.get(stage_id, [])  # stage 13 evicted
+
+    store = _Store()
+    with pytest.raises(StageRecordsEvicted, match="job 6"):
+        stage_totals(store, (5, 10), 8)
+    with pytest.raises(StageRecordsEvicted, match=r"evicted stages \[13\]"):
+        stage_totals(store, (7, 12), 8)
+    # Spark drops skipped stages first: when the job ran only stage 12,
+    # the missing stage 13 was skipped and the totals are complete;
+    # skipped stages are not counted
+    store.jobs[7]["numCompletedStages"] = 1
+    d = stage_totals(store, (7, 12), 8)
+    assert d["n_jobs"] == 1 and d["n_stages"] == 1
+    assert d["shuffleWriteBytes"] == 1
 
 
 def test_bench_set_spill_free_on_skewed_input(spark, tmp_path):
@@ -196,9 +254,9 @@ def test_bench_set_spill_free_on_skewed_input(spark, tmp_path):
     collapse onto one hub value (fuzz.py's ``skew`` class), not just on
     the uniform fixtures — a hub key concentrates one window/group
     partition with a third of the table, which is exactly where a
-    sort-window or hash-agg starts spilling first. Exchange ceilings
-    are rechecked too (totals move only marginally: the same rows
-    shuffle, just unevenly).
+    sort-window or hash-agg starts spilling first. Exchange and stage
+    shuffle ceilings are rechecked too (totals move only marginally:
+    the same rows shuffle, just unevenly).
 
     Ledger note (BASELINE.md round-16): at sf0.01 no bench query needs
     the salted form under a 35% hub — zero spill across all 19; the
@@ -208,19 +266,5 @@ def test_bench_set_spill_free_on_skewed_input(spark, tmp_path):
 
     skew_dir = str(tmp_path / "skewed_sf001")
     mutate_dir(SF_DIR, skew_dir, seed=16, mutations=("skew",))
-    specs = _bench_specs()
-    failures = []
-    for name, spec in specs.items():
-        spark.catalog.clearCache()
-        summary = plan_io_summary(collect_metrics(spec.fn(spark, skew_dir)))
-        ceiling = EXCHANGE_CEILING.get(name, DEFAULT_CEILING)
-        if summary["spill_bytes"] != 0:
-            failures.append(
-                f"{name}: operator spill {summary['spill_bytes']} B (skewed)"
-            )
-        if summary["shuffle_max_exchange_bytes"] > ceiling:
-            failures.append(
-                f"{name}: max exchange {summary['shuffle_max_exchange_bytes']} B"
-                f" > ceiling {ceiling} B (skewed)"
-            )
-    assert not failures, "\n".join(failures)
+    failures = _audit_bench_set(spark, skew_dir)
+    assert not failures, "(skewed)\n" + "\n".join(failures)

@@ -618,8 +618,9 @@ def test_scheduler_reuses_one_work_dir_across_ticks(spark):
 
 
 def test_input_dir_override_replays_identical_traffic(spark, tmp_path, pipeline):
-    """`run_routed_pipeline(input_dir=...)` (the traffic-ladder harness
-    hook, scripts/stream_ladder_r12.py) must feed the identical consume
+    """`run_routed_pipeline(input_dir=...)` (the hook replicated-traffic
+    runs use, e.g. the perfbench request stream and the BASELINE.md
+    round-12 stream ladder) must feed the identical consume
     pipeline: an explicitly staged copy of the same traffic produces
     byte-identical final states and completion totals as the default
     staged path."""
