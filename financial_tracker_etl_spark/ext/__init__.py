@@ -1,289 +1,73 @@
-"""Shared staging helpers for the pair-producing ext operators, plus
-the lineage-cut machinery for the iterative ones: localCheckpoint by
-default, ownership-scoped reliable checkpoints (with
-PeriodicCheckpointer-style retention) under the checkpointDir knob."""
+"""Shared helpers for the ext operators: :class:`LineageCuts`, the
+per-iteration lineage cut of the iterative operators (pagerank, BFS,
+connected components, BPE training), and :func:`materialize_release`,
+the end-of-build step of the pair-producing ones.
+
+A cut is ``localCheckpoint(eager=True)`` by default. With
+:data:`CHECKPOINT_DIR_CONF` set, each operator run owns a fresh
+``<dir>/<uuid>`` directory, writes every cut there as parquet and keeps
+only its newest :data:`CHECKPOINT_KEEP` cuts. Runs share no state, so
+concurrent runs on different driver threads cannot touch each other's
+files, and the SparkContext's own checkpoint directory is never used.
+"""
 
 from __future__ import annotations
 
-import functools
-import threading
-from collections import deque
-from contextlib import contextmanager
+import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime conf key: set to a cluster-visible directory (HDFS/S3) to
-#: make every per-iteration lineage cut in the iterative operators a
-#: RELIABLE checkpoint instead of a localCheckpoint. When set, this
-#: module takes OWNERSHIP of the SparkContext's checkpoint directory
-#: (see :func:`cut_lineage`).
+#: make every lineage cut of the iterative operators a durable parquet
+#: write under it instead of a localCheckpoint, so an iteration
+#: survives executor loss at the cost of one DFS write+read per cut.
 CHECKPOINT_DIR_CONF = "spark.financial_tracker_etl_spark.checkpointDir"
 
-#: Reliable checkpoints retained per ownership scope when the knob is
-#: active. Mirrors Spark ML's ``PeriodicCheckpointer``: once a newer
-#: checkpoint has materialized, iterations older than the last
-#: ``CHECKPOINT_KEEP`` are dead weight — without retention a
-#: 20-iteration pagerank on the reliable path would leave ~10 full
-#: copies of the rank vector on DFS per run, exactly the
-#: long-job/spot-fleet scenario the knob targets. 2, not 1: the
-#: in-flight cut may still read the previous iteration's checkpointed
-#: frame while materializing.
+#: Durable cuts kept per run. Older iterations are dead weight once a
+#: newer cut has materialized (a 20-iteration pagerank would otherwise
+#: leave ~10 copies of the rank vector per run). 2, not 1: the cut
+#: being written may still read the previous one.
 CHECKPOINT_KEEP = 2
 
-# Ownership tracking (round-8 ADVICE high): reaping must only ever
-# delete checkpoints THIS module created — like Spark ML's
-# PeriodicCheckpointer, which tracks the queue of checkpoints it made
-# and removes only those — and must be scoped per operator invocation
-# so the final checkpoint RETURNED by one operator (re-read from its
-# files on every later action) is never deleted by the next operator's
-# cuts. Scopes are thread-local, so concurrent driver threads (Spark
-# supports concurrent jobs on one context) each retain their own
-# window and never reap a checkpoint another thread just materialized.
-_TLS = threading.local()
 
-# Round-9 ADVICE (low): the before-listing in :func:`cut_lineage`
-# exists only to feed the listing-diff FALLBACK attribution, yet it
-# costs a listStatus round-trip per cut — an extra remote listing per
-# iteration on the knob's target scenario (S3/HDFS). Precise
-# attribution via ``LogicalRDD → getCheckpointFile`` works on this
-# Spark version (pinned by test), so after its first success we stop
-# taking the before-listing; if precise attribution EVER returns None
-# (an internal plan-shape change), the flag flips back off and every
-# later cut lists again. Process-global on purpose: it probes an
-# engine capability, not per-thread state, and the write race is
-# benign (monotone until a failure is observed).
-_PRECISE_ATTRIBUTION_OK = False
+class LineageCuts:
+    """The lineage cuts of one iterative-operator run: call it on each
+    round's frame to materialize it and truncate its plan, so the
+    logical tree stays bounded across iterations.
 
-
-def _active_owned() -> deque:
-    """The deque of owned checkpoint paths for the current thread:
-    the innermost :func:`checkpoint_scope` if one is open, else the
-    thread's ambient deque (for direct ``cut_lineage`` callers)."""
-    stack = getattr(_TLS, "scopes", None)
-    if stack:
-        return stack[-1]
-    ambient = getattr(_TLS, "ambient", None)
-    if ambient is None:
-        ambient = _TLS.ambient = deque()
-    return ambient
-
-
-@contextmanager
-def checkpoint_scope():
-    """Ownership scope for the reliable-checkpoint retention window.
-
-    Every iterative operator opens one around its loop, so the
-    :data:`CHECKPOINT_KEEP` retention window applies to THAT
-    invocation's checkpoints only: when the scope closes, its
-    surviving (newest ≤ ``CHECKPOINT_KEEP``) checkpoints — including
-    the one backing the operator's returned frame — leave the reaping
-    system entirely and stay readable for the life of the returned
-    frame. Checkpoints created by other scopes, other threads, or by
-    the user directly (``df.checkpoint()``) are never candidates.
-
-    Files surviving a closed scope are not deleted by this module;
-    callers running many knob-set operators in one long-lived driver
-    should remove the knob directory when the outputs are no longer
-    needed (or unset the knob for short jobs — localCheckpoint blocks
-    are reclaimed automatically).
+    The conf is read once, when the run starts. Unset, a cut is
+    ``df.localCheckpoint(eager=True)``: its blocks live in
+    non-replicated executor storage, so an executor loss fails the job
+    and a retry starts over, which suits short jobs. Set, the run writes
+    cut ``n`` to ``<dir>/<uuid>/<n>`` as parquet, returns a read of it,
+    and deletes its own cuts older than the newest
+    :data:`CHECKPOINT_KEEP`. The surviving cuts back the run's returned
+    frame and are not deleted by this class; remove the conf directory
+    when the outputs are no longer needed.
     """
-    stack = getattr(_TLS, "scopes", None)
-    if stack is None:
-        stack = _TLS.scopes = []
-    owned: deque = deque()
-    stack.append(owned)
-    try:
-        yield owned
-    finally:
-        stack.pop()
 
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        target = spark.conf.get(CHECKPOINT_DIR_CONF, None)
+        self._dir = f"{target.rstrip('/')}/{uuid.uuid4().hex}" if target else None
+        self._kept: list[str] = []
+        self._n = 0
 
-def checkpoint_scoped(fn):
-    """Decorator: run ``fn`` inside its own :func:`checkpoint_scope`,
-    so each invocation of an iterative operator owns (and reaps) only
-    the checkpoints its own ``cut_lineage`` calls create."""
+    def __call__(self, df: DataFrame) -> DataFrame:
+        if self._dir is None:
+            return df.localCheckpoint(eager=True)
+        path = f"{self._dir}/{self._n}"
+        self._n += 1
+        df.write.parquet(path)
+        self._kept.append(path)
+        if len(self._kept) > CHECKPOINT_KEEP:
+            self._delete(self._kept.pop(0))
+        return self._spark.read.parquet(path)
 
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        with checkpoint_scope():
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
-def _resolved_checkpoint_parent(sc) -> str | None:
-    """The PARENT of the context's resolved checkpoint dir, qualified.
-
-    ``setCheckpointDir(target)`` stores ``<qualified target>/<uuid>``;
-    comparing the parent against the qualified target tells us whether
-    the context is currently pointed at our knob directory — without a
-    shadow attribute that goes stale if foreign code calls
-    ``setCheckpointDir`` in between (round-7 ADVICE low).
-    """
-    resolved = sc.getCheckpointDir()
-    if not resolved:
-        return None
-    jvm = sc._jvm
-    return str(jvm.org.apache.hadoop.fs.Path(resolved).getParent())
-
-
-def _qualified(sc, target: str) -> str:
-    jvm = sc._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(target)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    return str(fs.makeQualified(hpath))
-
-
-def _list_rdd_paths(sc, resolved: str) -> set[str]:
-    """Fully-qualified ``rdd-*`` entry paths under ``resolved``.
-
-    Reliable checkpoints are written as ``<dir>/<uuid>/rdd-<id>``;
-    ``resolved`` is the ``<dir>/<uuid>`` the context currently points
-    at, and ``listStatus`` returns qualified paths, so the
-    before/after set difference around a ``checkpoint()`` call
-    identifies exactly the entries that call created."""
-    jvm = sc._jvm
-    dir_path = jvm.org.apache.hadoop.fs.Path(resolved)
-    fs = dir_path.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(dir_path):
-        return set()
-    return {
-        str(status.getPath())
-        for status in fs.listStatus(dir_path)
-        if status.getPath().getName().startswith("rdd-")
-    }
-
-
-def _created_checkpoint_path(out: DataFrame) -> str | None:
-    """The exact checkpoint directory backing an eagerly checkpointed
-    DataFrame — race-free ownership attribution.
-
-    ``df.checkpoint(eager=True)`` returns a frame whose analyzed plan
-    is a ``LogicalRDD`` over the just-checkpointed RDD;
-    ``RDD.getCheckpointFile`` yields its ``.../<uuid>/rdd-<id>`` path.
-    Unlike a before/after directory-listing diff, this cannot claim an
-    entry a concurrent thread's cut created in the same window. Returns
-    None if the internal plan shape ever changes (caller falls back to
-    the listing diff)."""
-    try:
-        f = out._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
-        return str(f.get()) if f.isDefined() else None
-    except Exception:
-        return None
-
-
-def _reap_owned(sc, owned: deque) -> None:
-    """Delete the oldest OWNED checkpoints beyond the newest
-    :data:`CHECKPOINT_KEEP` — and only owned ones: ``owned`` holds
-    exactly the paths this thread's current scope created via
-    :func:`cut_lineage`, so foreign checkpoints (other operators'
-    returned frames, other threads, direct ``df.checkpoint()`` users)
-    are never touched, per Spark ML's ``PeriodicCheckpointer``
-    contract. Spark's own cleaner does not help here:
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is read once
-    at ContextCleaner construction (session start) and only fires on
-    driver-side GC, so checkpoints otherwise accumulate forever.
-
-    A deleted entry's parent ``<uuid>`` directory is pruned when it
-    empties and is no longer the context's resolved dir (each
-    foreign-``setCheckpointDir`` correction mints a fresh UUID subdir,
-    so without pruning, ping-pong between this module and foreign code
-    would strand empty UUID dirs forever — round-8 ADVICE low). Owned
-    entries are only ever created while the context points at the knob
-    directory, whose UUID subdirs this module exclusively owns."""
-    jvm = sc._jvm
-    while len(owned) > CHECKPOINT_KEEP:
-        path_str = owned.popleft()
-        hpath = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-        parent = hpath.getParent()
-        if (
-            str(parent) != (sc.getCheckpointDir() or "")
-            and fs.exists(parent)
-            and len(fs.listStatus(parent)) == 0
-        ):
-            fs.delete(parent, False)
-
-
-def cut_lineage(df: DataFrame) -> DataFrame:
-    """Per-iteration lineage cut for the iterative operators (pagerank,
-    BFS, connected components, k-means, BPE): materialize ``df`` and
-    truncate its plan so the logical tree stays bounded across
-    iterations.
-
-    Default (knob unset): ``localCheckpoint(eager=True)``. The blocks
-    live in NON-replicated executor block storage, so on a real cluster
-    an executor loss mid-run fails the job and the retry starts over —
-    acceptable for short iterative jobs (these run minutes, and a job
-    retry is cheaper than paying a distributed write per iteration).
-
-    Knob: set :data:`CHECKPOINT_DIR_CONF` on the session's runtime conf
-    to a cluster-visible path to switch every cut to a RELIABLE
-    ``checkpoint(eager=True)`` under that directory — iterations
-    survive executor loss at the cost of one DFS write+read of the
-    evolving vector per cut. The right trade for long jobs on
-    preemptible/spot fleets, where the expected number of losses over
-    the run exceeds one.
-
-    Ownership + retention (knob set): this function re-points the
-    context at the knob path whenever the currently-resolved directory
-    differs (detected from the live context, so a foreign
-    ``setCheckpointDir`` in between is corrected, not silently
-    adopted), records the ``rdd-*`` entries each ``checkpoint()`` call
-    creates in the current thread's ownership scope (see
-    :func:`checkpoint_scope`), and after each new checkpoint
-    materializes deletes the scope's OWNED entries beyond the newest
-    :data:`CHECKPOINT_KEEP` (``PeriodicCheckpointer`` semantics —
-    track what you made, delete only that). Checkpoints from other
-    scopes/threads and direct ``df.checkpoint()`` output are never
-    deleted. Direct callers outside any scope share a thread-ambient
-    window and should ``checkpoint_scope()`` their loop — or keep
-    references only to frames among their last ``CHECKPOINT_KEEP``
-    cuts.
-    """
-    global _PRECISE_ATTRIBUTION_OK
-    spark = df.sparkSession
-    target = spark.conf.get(CHECKPOINT_DIR_CONF, None)
-    if target:
-        sc = spark.sparkContext
-        if _resolved_checkpoint_parent(sc) != _qualified(sc, target):
-            sc.setCheckpointDir(target)
-        resolved = sc.getCheckpointDir()
-        # the before-listing only feeds the fallback attribution below;
-        # once precise attribution has succeeded in this process, skip
-        # the extra listStatus per cut (round-9 ADVICE low).
-        before = (
-            None if _PRECISE_ATTRIBUTION_OK else _list_rdd_paths(sc, resolved)
-        )
-        out = df.checkpoint(eager=True)
-        owned = _active_owned()
-        created = _created_checkpoint_path(out)
-        if created is not None:
-            _PRECISE_ATTRIBUTION_OK = True
-            owned.append(created)
-        else:
-            _PRECISE_ATTRIBUTION_OK = False
-            if before is not None:
-                # fallback attribution: before/after listing diff.
-                # Exact in a single-threaded driver; under concurrent
-                # knob-set cuts it could misattribute a sibling
-                # thread's entry, which the precise path above exists
-                # to avoid.
-                diff = _list_rdd_paths(sc, resolved) - before
-                # rdd ids increase monotonically: newest-by-id == newest
-                owned.extend(
-                    sorted(diff, key=lambda p: int(p.rsplit("rdd-", 1)[1]))
-                )
-            # else: precise attribution had always worked (so no
-            # before-listing was taken) and just failed for the first
-            # time — leave THIS entry unowned. Unowned entries are
-            # never reaped: the safe failure direction is one leaked
-            # checkpoint dir, never a misattributed delete. Listing
-            # resumes from the next cut.
-        _reap_owned(sc, owned)
-        return out
-    return df.localCheckpoint(eager=True)
+    def _delete(self, path: str) -> None:
+        sc = self._spark.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+        hpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(hpath, True)
 
 
 def materialize_release(out: DataFrame, *staged: DataFrame) -> DataFrame:

@@ -11,13 +11,13 @@ Near-dup graphs are shallow (dup clusters are cliques-ish), so a handful
 of rounds suffice at any scale.
 
 Scale notes: each round is one shuffle (join on node) + an aggregation;
-a :func:`~financial_tracker_etl_spark.ext.cut_lineage` cut
-(localCheckpoint by default; reliable DFS checkpoint when the
-checkpointDir conf knob is set) truncates the lineage so the plan does not grow
-O(rounds). Fixpoint detection is folded into the round itself: the
-propagation select carries a ``_changed`` flag (labels only decrease,
-so changed ⇔ the neighborhood minimum beat the own label), which
-removes the old per-round new-vs-old join-and-count probe job
+a :class:`~financial_tracker_etl_spark.ext.LineageCuts` cut
+(localCheckpoint by default; with the checkpointDir conf set, a parquet
+write into the run's own directory) truncates the lineage so the plan
+does not grow O(rounds). Fixpoint detection is folded into the round
+itself: the propagation select carries a ``_changed`` flag (labels only
+decrease, so changed ⇔ the neighborhood minimum beat the own label),
+which removes the old per-round new-vs-old join-and-count probe job
 (round-3 judge task 5); the flag is consulted only every
 ``probe_every`` rounds, as an ``isEmpty`` over the already-checkpointed
 blocks — first-row short-circuit, no shuffle. Cluster id = the
@@ -28,10 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from . import checkpoint_scoped, cut_lineage
+from . import LineageCuts
 
 
-@checkpoint_scoped
 def connected_components(
     edges: DataFrame,
     src: str = "doc1",
@@ -59,13 +58,14 @@ def connected_components(
     # only the O(nodes) label side.
     from .graph import stage_on_key
 
+    cut = LineageCuts(edges.sparkSession)
     sym = stage_on_key(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct(),
         "b",
     )
-    labels = cut_lineage(
+    labels = cut(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -89,11 +89,11 @@ def connected_components(
                 (new_label < F.col("label")).alias("_changed"),
             )
         )
-        labels = cut_lineage(labels)
+        labels = cut(labels)
         if it % probe_every == 0 or it == max_iter:
             if labels.where("_changed").isEmpty():
                 break
-    # labels is a materialized checkpoint — the cached edge blocks are
+    # labels is a materialized cut — the cached edge blocks are
     # no longer needed by the returned frame
     sym.unpersist(blocking=False)
     return labels.select("node", F.col("label").alias("cluster_id"))

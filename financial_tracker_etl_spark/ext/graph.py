@@ -15,10 +15,10 @@ exact ppm constant, truncating integer division) so a DuckDB oracle
 that unrolls the same iterations hashes identically — the same
 transcendental-free determinism trade the ext tier makes everywhere.
 
-Scale notes: a :func:`~financial_tracker_etl_spark.ext.cut_lineage`
-cut (localCheckpoint by default; reliable DFS checkpoint when the
-checkpointDir conf knob is set — executor-loss recoverable at one DFS
-write+read per cut) every second iteration truncates the
+Scale notes: a :class:`~financial_tracker_etl_spark.ext.LineageCuts`
+cut every second iteration (localCheckpoint by default; with the
+checkpointDir conf set, a parquet write into the run's own directory —
+executor-loss recoverable at one DFS write+read per cut) truncates the
 rank vector's lineage (the connected-components lesson: without any
 cut the plan grows O(iterations) and planning time explodes at scale;
 a two-iteration uncut segment stays bounded while halving the
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from . import checkpoint_scoped, cut_lineage
+from . import LineageCuts
 
 
 def stage_on_key(df: DataFrame, key: str) -> DataFrame:
@@ -61,7 +61,6 @@ def stage_on_key(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-@checkpoint_scoped
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
@@ -99,6 +98,7 @@ def pagerank(
     # recoverability defect the round-5 advisory flagged on the pair
     # operators — checkpoint blocks are non-replicated, so an executor
     # loss failed the job instead of recomputing.
+    cut = LineageCuts(edges.sparkSession)
     ew = (
         edges.select("src", "dst", "w")
         .repartition("src")
@@ -126,7 +126,7 @@ def pagerank(
         nodes.unpersist(blocking=False)
         return nodes.withColumn("rank_ppm", F.lit(0).cast("long"))
     teleport_ppm = (1_000_000 - damping_ppm) // n_nodes
-    p = cut_lineage(
+    p = cut(
         nodes.withColumn("p", F.lit(1_000_000 // n_nodes).cast("long"))
     )
     for i in range(iters):
@@ -147,15 +147,14 @@ def pagerank(
             ).cast("long").alias("p"),
         )
         if (i + 1) % ckpt_every == 0 or i == iters - 1:
-            p = cut_lineage(p)
-    # the final p is a materialized checkpoint — the cached build-side
+            p = cut(p)
+    # the final p is a materialized cut — the cached build-side
     # blocks are no longer needed by the returned frame
     ew.unpersist(blocking=False)
     nodes.unpersist(blocking=False)
     return p.select("node", F.col("p").alias("rank_ppm"))
 
 
-@checkpoint_scoped
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
@@ -168,9 +167,8 @@ def bfs_hops(
 
     Each round is one edge⋈distance equi-join + a min-aggregation
     (same single-shuffle shape as the PageRank iteration), with
-    :func:`~financial_tracker_etl_spark.ext.cut_lineage` cutting the
-    frontier's lineage per round (localCheckpoint, or a reliable
-    checkpoint under the checkpointDir conf knob) and
+    a :class:`~financial_tracker_etl_spark.ext.LineageCuts` cut of the
+    frontier's lineage per round and
     the static edge side staged via :func:`stage_on_key` so each
     round's join moves only the frontier, never the edge list.
     Relaxation is monotone (min over a growing candidate set), so
@@ -178,8 +176,9 @@ def bfs_hops(
     distances."""
     # stage_on_key's persist runs the upstream edge construction once;
     # no eager pre-checkpoint (lineage kept — see pagerank's note)
+    cut = LineageCuts(edges.sparkSession)
     edges = stage_on_key(edges.select("src", "dst"), "src")
-    dist = cut_lineage(
+    dist = cut(
         seeds.select("node")
         .distinct()
         .withColumn("dist", F.lit(0).cast("int"))
@@ -192,12 +191,12 @@ def bfs_hops(
                 (F.col("dist") + 1).cast("int").alias("dist"),
             )
         )
-        dist = cut_lineage(
+        dist = cut(
             dist.unionByName(hop)
             .groupBy("node")
             .agg(F.min("dist").cast("int").alias("dist"))
         )
-    # the final dist is a materialized checkpoint — the cached edge
+    # the final dist is a materialized cut — the cached edge
     # blocks are no longer needed by the returned frame
     edges.unpersist(blocking=False)
     return dist

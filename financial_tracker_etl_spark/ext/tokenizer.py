@@ -12,14 +12,18 @@ pair-count / merge step runs over that compressed table. Pair counting
 is a single explode + hash aggregation (map-side partial combine);
 the per-iteration "best pair" is a 1-row driver action over an
 already-aggregated frame, and the merge application is a pure
-column-expression fold (no Python UDF anywhere).
+column-expression fold (no Python UDF anywhere). Each merge's new
+symbol table is a :class:`~financial_tracker_etl_spark.ext.LineageCuts`
+cut: a localCheckpoint by default, or, with the checkpointDir conf set,
+a parquet write into the training run's own directory, of which the
+run keeps only its newest two.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from . import checkpoint_scoped, cut_lineage
+from . import LineageCuts
 
 # end-of-word marker, appended as a terminal symbol so merges cannot
 # cross word boundaries and word-final units are distinguishable (the
@@ -107,7 +111,6 @@ def best_pair(symtab: DataFrame) -> tuple[str, str, int] | None:
     return (r["left"], r["right"], r["pair_count"])
 
 
-@checkpoint_scoped
 def train_merges(
     df: DataFrame, n_merges: int, text_col: str = "text"
 ) -> list[tuple[str, str, int]]:
@@ -116,13 +119,12 @@ def train_merges(
 
     Each iteration: count pairs (distributed), pick the argmax (1-row
     collect), apply the merge to the symbol table (column fold), and
-    :func:`~financial_tracker_etl_spark.ext.cut_lineage` the new
-    state (localCheckpoint, or a reliable checkpoint under the
-    checkpointDir conf knob) so the plan does not accrete one
-    fold per iteration (the connected-components lineage lesson,
-    VERDICT r2 — plan growth, not data volume, is what kills iterative
-    jobs at scale)."""
-    symtab = cut_lineage(word_symbol_table(df, text_col))
+    cut the new state's lineage with the run's
+    :class:`~financial_tracker_etl_spark.ext.LineageCuts` so the plan
+    does not accrete one fold per iteration (plan growth, not data
+    volume, is what kills iterative jobs at scale)."""
+    cut = LineageCuts(df.sparkSession)
+    symtab = cut(word_symbol_table(df, text_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         pick = best_pair(symtab)
@@ -130,7 +132,7 @@ def train_merges(
             break
         left, right, cnt = pick
         merges.append((left, right, cnt))
-        symtab = cut_lineage(
+        symtab = cut(
             symtab.select(
                 _apply_merge(F.col("syms"), left, right).alias("syms"), "n"
             )

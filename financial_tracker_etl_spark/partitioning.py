@@ -19,18 +19,21 @@ The count is ``max(min(4, cores), ceil(bytes / 64 MB))``:
   partitions of bounded size, not ``cores`` partitions of unbounded
   size.
 
-Env pins win over the derivation: ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``,
-then ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (the partition-count invariance
-harness: results must never depend on this count, and the 7- and
-90-partition differentials force it). ``SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES``
-overrides the 64 MB target.
+``SPARK_GRAFT_SHUFFLE_PARTITIONS`` wins over the derivation: it is the
+partition-count invariance harness (results must never depend on this
+count, and the 7- and 90-partition differentials force it).
+
+:func:`scoped_shuffle_partitions` is the one way a computation runs
+under the count derived from its own working set.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from .session import default_parallelism
 
@@ -71,19 +74,40 @@ def derived_shuffle_partitions(*dfs: DataFrame) -> int:
     summed plan-statistics bytes at 64 MB a partition, floored at
     ``min(4, cores)``. A frame without size statistics contributes
     nothing, so an unmeasurable working set gets the floor."""
-    pinned = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
-    ) or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    pinned = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if pinned:
         return max(1, int(pinned))
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES",
-            str(TARGET_PARTITION_BYTES),
-        )
-    )
     total = sum(plan_bytes(df) or 0 for df in dfs)
-    return max(min(4, _cores()), -(-total // target))
+    return max(min(4, _cores()), -(-total // TARGET_PARTITION_BYTES))
+
+
+@contextlib.contextmanager
+def scoped_shuffle_partitions(
+    spark: SparkSession, *dfs: DataFrame
+) -> Iterator[None]:
+    """Set spark.sql.shuffle.partitions to
+    :func:`derived_shuffle_partitions` of ``dfs`` while one computation
+    sized from that working set plans its jobs, then restore the
+    session value so other queries keep their own sizing. The callers
+    are run-to-completion streams (the conf is read when the stream
+    plans its first batch) and iterative graph loops (every round's
+    eager job is planned inside the scope).
+
+    The conf is session-global: a query that another driver thread
+    plans on the same SparkSession while the scope is open inherits
+    the count. So every caller holds the scope on its own thread and
+    plans only its own jobs inside it. The one thread pool that runs
+    inside a scope, pipeline.handle_batch's per-topic merges, does so
+    on purpose: those merges are the shuffles being sized. A caller
+    that must plan unrelated queries concurrently needs a per-session
+    conf from ``SparkSession.newSession()`` instead of this scope."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(derived_shuffle_partitions(*dfs)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 # operators that keep their child's partitions

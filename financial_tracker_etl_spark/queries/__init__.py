@@ -29,30 +29,74 @@ class QuerySpec:
 
 
 # The driver's CORRECTNESS gate checks exactly the first 50 registry
-# entries, so registry order is a correctness-visibility lever and the
-# prefix is an explicit priority list, rotated each round so that every
-# query's green evidence is at most one round old (COVERAGE.md records
-# the per-query last-green round).
+# entries, so registry order decides which queries it sees. The 150
+# queries partition into three 50-query blocks, and the gate rotates
+# through them: each round the block whose driver evidence is oldest
+# becomes the prefix, the block checked last round becomes the suffix,
+# and the third block sits in between. COVERAGE.md records the
+# per-query last-green round.
 #
-# After round 5 the 150 registry queries partition exactly into three
-# 50-query blocks by newest driver row: round 3 / round 4 / round 5
-# (verified: the CORRECTNESS_r0{3,4,5}.json key sets are disjoint and
-# cover the registry). From here the gate runs a steady 3-round
-# rotation so no query's green evidence is ever older than two rounds:
+# Current assignment. Prefix: the round-4/7/8/11/14 block (exactly the
+# CORRECTNESS_r14.json key set). Suffix: the round-6/10/13/17 block,
+# the previous prefix. The round-5/9/12/15 block sits in the middle
+# and is the next prefix.
 #
-# ROUND-16 prefix: the round-6/10/13 block — exactly the
-# CORRECTNESS_r13.json key set, whose newest driver rows are now the
-# oldest (3 rounds stale after coasting through rounds 14-15), as the
-# round-15 VERDICT task 1 mandates. Suffix: the round-5/9/12 block
-# (re-proven as the round-15 gate — CORRECTNESS_r15.json — the
-# freshest evidence, coasts this round); the round-4/7/8/11/14 block
-# sits in the middle and becomes the round-17 prefix.
-#
-# Registry remains FROZEN at 150 (round-4 judge task 2; reaffirmed by
-# the round-4/5/6 VERDICTs). The thirteen round-4 twin retirements and
-# their named covering queries are recorded in COVERAGE.md.
-#
+# The registry is frozen at 150 queries; the round-4 twin retirements
+# and the queries that cover them are recorded in COVERAGE.md.
 _CHECK_FIRST = [
+    "binned_range_join",
+    "bloom_pruned_anti_join",
+    "bm25_doc_ranking",
+    "bpe_pair_counts",
+    "brand_price_regression",
+    "brand_supplier_concentration",
+    "brand_triangle_counts",
+    "bucketed_colocated_join",
+    "cdc_apply_roundtrip",
+    "cms_token_frequencies",
+    "cogroup_state_reconciliation",
+    "copurchase_brand_pairs",
+    "curation_pipeline_v2",
+    "curriculum_difficulty_buckets",
+    "dq_expectations_report",
+    "embedding_ann_ivfpq",
+    "event_type_transitions",
+    "hierarchical_time_rollup",
+    "histogram_quantile_sketch",
+    "hll_shard_merge",
+    "ivm_maintained_agg",
+    "key_skew_report",
+    "nb_quality_filter",
+    "ngram_novelty_scores",
+    "order_fulfillment_latency",
+    "per_stratum_sample",
+    "phrase_search_index",
+    "pit_customer_features",
+    "pps_weighted_sample",
+    "purchase_graph_bfs_hops",
+    "purchase_graph_pagerank",
+    "referential_integrity_audit",
+    "salted_skew_join_revenue",
+    "scd2_part_prices",
+    "skew_safe_count_distinct",
+    "source_length_gini",
+    "state_time_travel",
+    "stream_cdc_apply",
+    "stream_docs_ingest_dedup",
+    "stream_sliding_window_counts",
+    "table_diff_buckets",
+    "target_encoding_loo",
+    "top_supplier_revenue",
+    "udaf_event_value_median",
+    "unpivot_market_measures",
+    "user_activity_streaks",
+    "value_drift_report",
+    "weekly_growth_accounting",
+    "winsorized_quantity_stats",
+    "zorder_layout_stats",
+]
+
+_CHECK_LAST = [
     "a1_historical_batches",
     "a4_latest_monthly_price",
     "asof_quote_join",
@@ -103,64 +147,6 @@ _CHECK_FIRST = [
     "udtf_month_spine",
     "upsert_market_data",
     "x1_exact_dedup",
-]
-
-# Suffix: the 50 round-5/9/12-block queries — re-proven as the
-# round-15 gate (CORRECTNESS_r15.json, 50/50 green), the freshest
-# driver evidence, so they coast this round. The loop in registry()
-# places the round-4/7/8/11/14-green block between the prefix and this
-# suffix; the gate never reaches either.
-_CHECK_LAST = [
-    "activity_heatmap_cells",
-    "benchmark_contamination",
-    "bloom_source_overlap",
-    "brand_association_rules",
-    "chunk_level_dedup",
-    "cohort_funnel_conversion",
-    "corpus_curation_summary",
-    "dedup_impact_by_source",
-    "doc_lm_perplexity",
-    "doc_price_indicators",
-    "doc_token_chunks",
-    "dormant_rich_customers",
-    "dsir_importance_weights",
-    "embedding_ann_ivf",
-    "embedding_cosine_near_dups",
-    "embedding_int8_quantize",
-    "embedding_label_centroids",
-    "flagship_historical_repair",
-    "funnel_latency_quantiles",
-    "historical_missing_months",
-    "incremental_dedup_new_docs",
-    "kmeans_assign_step",
-    "lang_id_confusion_matrix",
-    "leakage_safe_splits",
-    "length_outlier_filter",
-    "mad_quantity_by_flag",
-    "minhash_lsh_near_dups",
-    "nation_share_of_region",
-    "pareto_top_decile_share",
-    "pii_scrub_stats",
-    "rolling_week_user_activity",
-    "semantic_dedup_pairs",
-    "seq_packing_plan",
-    "sequence_bigram_support",
-    "sessions_in_anomalous_hours",
-    "simhash_near_dup_pairs",
-    "source_vocab_divergence",
-    "stream_pipeline_completions",
-    "stream_stateful_ewma",
-    "stream_upsert_market_data",
-    "text_repetition_stats",
-    "text_stratified_sample",
-    "tfidf_keywords",
-    "token_budget_mix",
-    "top_parts_per_brand_with_ties",
-    "user_modal_event_type",
-    "user_type_diversity",
-    "vocab_oov_rate",
-    "weekly_stickiness",
-    "winnow_overlap_pairs",
 ]
 
 

@@ -3644,17 +3644,40 @@ _PAGERANK_ITERS = 5
 _PAGERANK_DAMPING_PPM = 850_000
 
 
+def _purchase_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """The symmetric customer↔supplier purchase graph ``(src, dst, w)``:
+    one edge each way per (customer, supplier) pair, weighted by their
+    lineitem count (via orders), with nodes disambiguated as
+    2*custkey / 2*suppkey+1. Also returns the two source reads the
+    graph loops size their shuffles from."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    base = (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .groupBy("o_custkey", "l_suppkey")
+        .agg(F.count(F.lit(1)).cast("long").alias("w"))
+    )
+    cust = F.col("o_custkey") * 2
+    supp = F.col("l_suppkey") * 2 + 1
+    edges = base.select(cust.alias("src"), supp.alias("dst"), "w").unionByName(
+        base.select(supp.alias("src"), cust.alias("dst"), "w")
+    )
+    return edges, (li, orders)
+
+
 def _q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity importance on the bipartite purchase graph: an edge
     customer↔supplier weighted by their lineitem count (via orders),
     symmetrized so no node dangles; nodes are disambiguated as
     2*custkey / 2*suppkey+1. Five damped power iterations in integer
     ppm (ext/graph.py) — one edge⋈rank shuffle per iteration, lineage
-    cut by localCheckpoint each round.
+    cut every second round (ext.LineageCuts).
 
     The whole run executes under a shuffle partition count derived
     from the plan statistics of its two sources
-    (partitioning.derived_shuffle_partitions), not the session
+    (partitioning.scoped_shuffle_partitions), not the session
     constant: the rank vector is O(nodes) and the edge list a few MB
     at sf0.1, so 32 partitions per iteration would be 32 near-empty
     tasks, and AQE cannot coalesce them (parallelismFirst keeps the
@@ -3663,32 +3686,13 @@ def _q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer-ppm sums; pinned by the 7/90-partition full
     differentials). Every shuffle-bearing action of the operator
     happens inside pagerank() itself (eager lineage cuts), so the
-    scope covers the whole computation; the returned frame is a
-    checkpointed RDD plus narrow projections."""
+    scope covers the whole computation; the returned frame is the
+    final cut plus narrow projections."""
     from ..ext.graph import pagerank
-    from ..partitioning import derived_shuffle_partitions
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    base = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    fwd = base.select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        "w",
-    )
-    edges = fwd.unionByName(
-        base.select(
-            (F.col("l_suppkey") * 2 + 1).alias("src"),
-            (F.col("o_custkey") * 2).alias("dst"),
-            "w",
-        )
-    )
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(li, orders)):
+    edges, sources = _purchase_graph(spark, sf_dir)
+    with scoped_shuffle_partitions(spark, *sources):
         ranks = pagerank(
             edges, iters=_PAGERANK_ITERS, damping_ppm=_PAGERANK_DAMPING_PPM
         )
@@ -3764,28 +3768,12 @@ def _q_purchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _q_purchase_pagerank (same frontier-vs-32-empty-tasks shape;
     # every shuffle-bearing action runs inside bfs_hops' eager cuts)
     from ..ext.graph import bfs_hops
-    from ..partitioning import derived_shuffle_partitions
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    base = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).alias("_w"))
-    )
-    fwd = base.select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        base.select(
-            (F.col("l_suppkey") * 2 + 1).alias("src"),
-            (F.col("o_custkey") * 2).alias("dst"),
-        )
-    )
+    graph, sources = _purchase_graph(spark, sf_dir)
+    edges = graph.select("src", "dst")
     seeds = edges.agg(F.min("src").alias("node"))
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(li, orders)):
+    with scoped_shuffle_partitions(spark, *sources):
         dist = bfs_hops(edges, seeds, max_hops=_BFS_MAX_HOPS)
     return dist.select(
         "node",

@@ -341,8 +341,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, cluster_id = component min). Oracle is a DuckDB recursive
     CTE computing the same transitive closure."""
     from ..ext.cluster import connected_components
-    from ..partitioning import derived_shuffle_partitions
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents")
     # pair generation spreads its own fan-out (doc_shingles) and is
@@ -352,7 +351,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus: the label vector is O(docs), and at the session count
     # every round would be 32 near-empty tasks.
     edges = shingle_jaccard_pairs(docs).filter(F.col("jaccard") >= 0.4)
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(docs)):
+    with scoped_shuffle_partitions(spark, docs):
         components = connected_components(edges)
     return components.select(F.col("node").alias("doc_id"), "cluster_id")
 
@@ -1093,8 +1092,7 @@ def _q_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext.sampling.leakage_safe_splits)."""
     from ..ext.cluster import connected_components
     from ..ext.sampling import leakage_safe_splits
-    from ..partitioning import derived_shuffle_partitions
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents")
     # as in _q_dedup_clusters: the pairs materialize (with their
@@ -1102,7 +1100,7 @@ def _q_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the O(docs) label-propagation loop runs under the count derived
     # from the corpus
     edges = shingle_jaccard_pairs(docs).filter(F.col("jaccard") >= 0.4)
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(docs)):
+    with scoped_shuffle_partitions(spark, docs):
         clusters = connected_components(edges).select(
             F.col("node").alias("doc_id"), "cluster_id"
         )

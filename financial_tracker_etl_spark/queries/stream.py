@@ -373,10 +373,9 @@ def _q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles (the state windows) otherwise run at the batch-session
     # constant per micro-batch; size them from the feed like every
     # other run-to-completion stream (windows.py rationale)
-    from ..partitioning import derived_shuffle_partitions
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(feed)):
+    with scoped_shuffle_partitions(spark, feed):
         q = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)

@@ -426,11 +426,10 @@ def run_routed_pipeline(
     # shuffle MB-scale batches: size their partitions from the staged
     # traffic instead of the batch-session constant (windows.py
     # rationale; the stream plan itself is stateless foreachBatch)
-    from ..partitioning import derived_shuffle_partitions
-    from .windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
     backlog = spark.read.schema(REQUEST_SCHEMA).json(input_dir)
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(backlog)):
+    with scoped_shuffle_partitions(spark, backlog):
         query = (
             spark.readStream.schema(REQUEST_SCHEMA)
             .option("maxFilesPerTrigger", files_per_trigger)

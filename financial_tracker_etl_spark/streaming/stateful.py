@@ -186,11 +186,10 @@ def ewma_stream(
     # partition count pins the state-store instance count; 32 instances
     # on MB-scale state paid ~2x wall in fixed commit cost)
     from ..catalog import table_path
-    from ..partitioning import derived_shuffle_partitions
-    from .windows import scoped_shuffle_partitions
+    from ..partitioning import scoped_shuffle_partitions
 
     events = spark.read.parquet(table_path(sf_dir, "events"))
-    with scoped_shuffle_partitions(spark, derived_shuffle_partitions(events)):
+    with scoped_shuffle_partitions(spark, events):
         q = (
             updated.writeStream.foreachBatch(write_batch)
             .outputMode("update")

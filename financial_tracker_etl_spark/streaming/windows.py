@@ -20,12 +20,11 @@ from __future__ import annotations
 import contextlib
 import os
 import tempfile
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import events_ts_us_col, table_path
-from ..partitioning import derived_shuffle_partitions
+from ..partitioning import scoped_shuffle_partitions
 
 WATERMARK_DELAY = "47 minutes"
 WATERMARK_DELAY_US = 47 * 60 * 1_000_000
@@ -109,13 +108,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed cost dominated wall time (stream_stream_interval_join at sf0.1:
 # 25.5 s at 32 partitions vs 7.3 s at 4). So each run-to-completion stream
 # sizes its state from a batch read of its source through the shared
-# plan-statistics sizer (partitioning.derived_shuffle_partitions).
+# plan-statistics sizer (partitioning.scoped_shuffle_partitions).
 
 
-def _events_partitions(spark: SparkSession, sf_dir: str) -> int:
-    return derived_shuffle_partitions(
-        spark.read.parquet(table_path(sf_dir, "events"))
-    )
+def _events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(table_path(sf_dir, "events"))
 
 
 def unload_state_stores(spark: SparkSession) -> None:
@@ -139,44 +136,19 @@ def unload_state_stores(spark: SparkSession) -> None:
         pass  # non-fatal: providers stay loaded, as before
 
 
-@contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
-    """Set spark.sql.shuffle.partitions while one computation that is
-    sized from its own working set plans its jobs, then restore the
-    session value so other queries keep their own sizing. The callers
-    are run-to-completion streams (the conf is read when the stream
-    plans its first batch) and iterative graph loops (every round's
-    eager job is planned inside the scope).
-
-    The conf is session-global: a query that another driver thread
-    plans on the same SparkSession while the scope is open inherits
-    ``n``. So every caller holds the scope on its own thread and plans
-    only its own jobs inside it. The one thread pool that runs inside
-    a scope, pipeline.handle_batch's per-topic merges, does so on
-    purpose: those merges are the shuffles being sized. A caller that
-    must plan unrelated queries concurrently needs a per-session conf
-    from ``SparkSession.newSession()`` instead of this scope."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _run_to_table(
     df: DataFrame,
     spark: SparkSession,
     mode: str,
-    shuffle_partitions: int | None = None,
+    sized_by: DataFrame | None = None,
 ) -> DataFrame:
     """Drive a streaming aggregation to completion (AvailableNow) into a
     parquet sink and hand back the materialized result. Append mode
     writes directly; complete mode goes through foreachBatch overwrite
     (the file sink is append-only by design — each complete-mode batch
     is a full snapshot, so overwrite-latest is the correct
-    materialization)."""
+    materialization). With ``sized_by``, the stream's shuffles run under
+    the partition count derived from that batch read of its source."""
     out_dir = tempfile.mkdtemp(prefix="ftes_win_")
     sink, ckpt = os.path.join(out_dir, "sink"), os.path.join(out_dir, "ckpt")
     writer = df.writeStream.outputMode(mode)
@@ -189,10 +161,8 @@ def _run_to_table(
     else:
         writer = writer.format("parquet").option("path", sink)
     with contextlib.ExitStack() as stack:
-        if shuffle_partitions is not None:
-            stack.enter_context(
-                scoped_shuffle_partitions(spark, shuffle_partitions)
-            )
+        if sized_by is not None:
+            stack.enter_context(scoped_shuffle_partitions(spark, sized_by))
         q = (
             writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -227,7 +197,7 @@ def hourly_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_value",
         "first_user",
     )
-    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
+    return _run_to_table(out, spark, "append", _events_batch(spark, sf_dir))
 
 
 def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,7 +227,7 @@ def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_value",
         "max_value",
     )
-    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
+    return _run_to_table(out, spark, "append", _events_batch(spark, sf_dir))
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,7 +257,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .select("event_id", "user_id", "event_type", "ts_us")
     )
-    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
+    return _run_to_table(out, spark, "append", _events_batch(spark, sf_dir))
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,7 +282,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("max_value"),
         F.max("ts_us").alias("last_ts_us"),
     )
-    return _run_to_table(agg, spark, "complete", _events_partitions(spark, sf_dir))
+    return _run_to_table(agg, spark, "complete", _events_batch(spark, sf_dir))
 
 
 def stream_stream_interval_join(
@@ -360,7 +330,7 @@ def stream_stream_interval_join(
         "b_event_id",
         (F.col("b_ts_us") - F.col("a_ts_us")).alias("delta_us"),
     )
-    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
+    return _run_to_table(out, spark, "append", _events_batch(spark, sf_dir))
 
 
 def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,7 +358,7 @@ def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         "user_id", "session_start_us", "session_end_us", "n_events"
     )
-    return _run_to_table(out, spark, "append", _events_partitions(spark, sf_dir))
+    return _run_to_table(out, spark, "append", _events_batch(spark, sf_dir))
 
 
 _DOC_STAGE_CACHE: dict[str, str] = {}
@@ -442,7 +412,7 @@ def docs_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped,
         spark,
         "append",
-        derived_shuffle_partitions(batch),
+        batch,
     )
     return survivors.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_unique_docs"),

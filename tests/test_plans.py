@@ -395,18 +395,11 @@ def test_persisted_staging_preserves_partitioning_for_iteration_joins(spark):
 
 def test_registry_rotation_structure(reg):
     """The driver gate checks exactly the first 50 registry entries, so
-    registry ORDER is load-bearing. Pin the steady 3-round rotation
-    arithmetic (in effect since round 6): prefix = _CHECK_FIRST = the
-    block whose newest driver row is oldest (round 16: the
-    CORRECTNESS_r13.json key set, 3 rounds stale after coasting
-    through rounds 14-15 — the round-15 VERDICT task 1 mandate),
-    suffix = _CHECK_LAST = the freshest block (round 16: the
-    r05/r09/r12 key set, re-proven as the round-15 gate in
-    CORRECTNESS_r15.json), no duplicates, 150 total, and
-    prefix/suffix disjoint so every query's driver row ends the round
-    at most two rounds old. Round-17 rotation: prefix = the r04/r07/
-    r08/r11/r14 block (the middle this round), suffix = this round's
-    prefix (r13 keys)."""
+    registry ORDER is load-bearing. Pin the 3-block rotation: prefix =
+    _CHECK_FIRST = the block whose driver evidence is oldest (the
+    round-4/7/8/11/14 block, the CORRECTNESS_r14.json key set), suffix
+    = _CHECK_LAST = the previous prefix (the CORRECTNESS_r17.json key
+    set), the round-15 block in between, no duplicates, 150 total."""
     import json
     import pathlib
 
@@ -418,11 +411,12 @@ def test_registry_rotation_structure(reg):
     assert names[:50] == _CHECK_FIRST
     assert names[-len(_CHECK_LAST):] == _CHECK_LAST
     root = pathlib.Path(__file__).resolve().parents[1]
-    r13 = root / "CORRECTNESS_r13.json"
-    r15 = root / "CORRECTNESS_r15.json"
-    if r13.exists() and r15.exists():
-        assert set(_CHECK_FIRST) == set(json.loads(r13.read_text()))
-        assert set(_CHECK_LAST) == set(json.loads(r15.read_text()))
+    blocks = [root / f"CORRECTNESS_r{n}.json" for n in (14, 15, 17)]
+    if all(b.exists() for b in blocks):
+        first, middle, last = (set(json.loads(b.read_text())) for b in blocks)
+        assert set(_CHECK_FIRST) == first
+        assert set(names[50:100]) == middle
+        assert set(_CHECK_LAST) == last
         assert not (set(_CHECK_FIRST) & set(_CHECK_LAST))
 
 
@@ -613,14 +607,9 @@ def _exchanges(df) -> int:
 
 @pytest.fixture
 def four_cores(monkeypatch):
-    """Sizer inputs fixed: 4 cores, no partition-count pins."""
+    """Sizer inputs fixed: 4 cores, no partition-count pin."""
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    for pin in (
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        "SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES",
-    ):
-        monkeypatch.delenv(pin, raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
 
 
 def _one_split_docs(spark, tmp_path):
@@ -695,7 +684,7 @@ def test_doc_shingles_adds_no_exchange_over_a_wide_input(spark, tmp_path, four_c
 def test_derived_shuffle_partitions_sizing(spark, four_cores, monkeypatch):
     """Shuffle partitions derive from plan-statistics bytes at 64 MB a
     partition, with a min(4, cores) floor, no cores cap, and the
-    partition-count pins winning over the derivation (results must
+    partition-count pin winning over the derivation (results must
     never depend on this count)."""
     from financial_tracker_etl_spark.partitioning import (
         TARGET_PARTITION_BYTES,
@@ -711,11 +700,6 @@ def test_derived_shuffle_partitions_sizing(spark, four_cores, monkeypatch):
     assert derived_shuffle_partitions(small) == 2
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
 
-    # ceil(bytes / target), via the target override
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES", "128")
-    assert derived_shuffle_partitions(small) == 8  # ceil(1024/128)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_TARGET_PARTITION_BYTES")
-
     # several frames: their bytes add up, ceil((64 MB + 16) / 64 MB) = 2
     exact = spark.range(TARGET_PARTITION_BYTES // 8)
     assert derived_shuffle_partitions(exact, spark.range(2)) == 4
@@ -730,11 +714,9 @@ def test_derived_shuffle_partitions_sizing(spark, four_cores, monkeypatch):
     statless = spark.createDataFrame([(1,)], "x long")
     assert derived_shuffle_partitions(statless) == 4
 
-    # the invariance pin wins over the derivation, the stream pin over both
+    # the invariance pin wins over the derivation
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
     assert derived_shuffle_partitions(big) == 7
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "90")
-    assert derived_shuffle_partitions(small) == 90
 
 
 def test_unmeasured_leaf_sizes_to_the_floor(spark, four_cores):

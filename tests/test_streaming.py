@@ -706,14 +706,21 @@ def test_event_time_ingest_bound_drops_warped_rows(spark, tmp_path):
     assert got.filter(F.col("ts_us").isNull()).collect()[0]["event_id"] == 5
 
 
-def test_scoped_shuffle_partitions_restores(spark):
-    from financial_tracker_etl_spark.streaming.windows import (
+def test_scoped_shuffle_partitions_restores(spark, monkeypatch):
+    from financial_tracker_etl_spark.partitioning import (
+        derived_shuffle_partitions,
         scoped_shuffle_partitions,
     )
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    with scoped_shuffle_partitions(spark, 5):
+    sized = spark.range(128)
+    with scoped_shuffle_partitions(spark, sized):
+        assert spark.conf.get(key) == str(derived_shuffle_partitions(sized))
+    assert spark.conf.get(key) == before
+    # the invariance pin reaches the scope through the derivation
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
+    with scoped_shuffle_partitions(spark, sized):
         assert spark.conf.get(key) == "5"
     assert spark.conf.get(key) == before
 
